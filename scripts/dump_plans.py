@@ -1,11 +1,13 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for a list of registered queries into
-plans/r14/<query>_<suffix>.txt — the before/after plan evidence for the
-r14 optimization round (guide §1.1: capture the plan shape before and
-after every change).
+"""Dump .explain("formatted") for registered queries into
+plans/<round>/<query>_<suffix>.txt — before/after plan evidence for an
+optimization change (capture the plan shape before and after it).
 
-Usage: python scripts/dump_plans_r14.py before|after [names ...]
-Default name list = the r14 touch list below.
+Usage: python scripts/dump_plans.py <round> before|after <names ...>
+
+Environment: SPARK_GRAFT_SF_DIR (table directory, default
+/root/testdata/sf0.1), SPARK_GRAFT_CPUS (local cores and shuffle
+partitions, default 32).
 """
 
 from __future__ import annotations
@@ -13,35 +15,19 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r14")
-
-# Queries examined/touched in the r14 optimization round.
-TOUCH_LIST = [
-    # r14 touched queries
-    "rfm_segments",
-    "snm_candidate_pairs",
-    "snm_blocking_eval",
-    "supplier_entity_clusters",
-    "ann_probe_sweep",
-    "quality_filter_kappa",
-    "nb_crossval_accuracy",
-    "nb_lang_confusion",
-    "neardup_kcore",
-    "neardup_centrality_quantized",
-    "neardup_hub_distances",
-    "bpe_merge_table",
-    "customer_decile_mobility",
-]
 
 
 def main() -> int:
-    suffix = sys.argv[1]
-    names = sys.argv[2:] or TOUCH_LIST
-    os.makedirs(OUT, exist_ok=True)
+    if len(sys.argv) < 4 or sys.argv[2] not in ("before", "after"):
+        print(__doc__, file=sys.stderr)
+        return 2
+    rnd, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out = os.path.join(ROOT, "plans", rnd)
+    os.makedirs(out, exist_ok=True)
 
     from pyspark.sql import SparkSession
 
@@ -64,7 +50,7 @@ def main() -> int:
             )
         except Exception as exc:  # noqa: BLE001
             txt = f"ERROR: {type(exc).__name__}: {exc}"
-        path = os.path.join(OUT, f"{name}_{suffix}.txt")
+        path = os.path.join(out, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)
         print(f"wrote {path} ({len(txt)} chars)")

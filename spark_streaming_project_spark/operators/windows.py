@@ -3,8 +3,13 @@ reference leaves implicit but the engine exposes)."""
 
 from __future__ import annotations
 
+import functools
+import operator
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def top_per_group(
@@ -31,6 +36,174 @@ def top_per_group(
     )
 
 
+class _Pass(NamedTuple):
+    """One prefix scan for :func:`_prefix_scan`: ``df`` in the total
+    ``order`` within each ``parts`` group, folding ``monoid`` over every
+    ``(input_col, out_col)`` of ``values`` (``count`` reads no column)."""
+
+    df: DataFrame
+    order: list[Column]
+    parts: list[str]
+    monoid: str
+    values: list[tuple[str | None, str]]
+
+
+def _fold_max(acc, v):
+    return v if v is not None and (acc is None or v > acc) else acc
+
+
+# monoid -> (per-(group, slice) aggregate, intra-slice window aggregate,
+#            combine(window value, offset), driver-side fold, identity)
+_MONOIDS = {
+    "count": (lambda _: F.count("*"), lambda _: F.row_number(),
+              operator.add, operator.add, 0),
+    "sum": (F.sum, F.sum, operator.add, lambda acc, v: acc + (v or 0), 0),
+    "max": (F.max, F.max, F.greatest, _fold_max, None),
+}
+
+
+def _prefix_scan(
+    passes: list[_Pass], max_sidecar_rows: int, op: str
+) -> list[DataFrame]:
+    """EXACT inclusive prefix aggregates (running count / sum / max) in a
+    total order without a single-partition global window — the one
+    mechanism behind every ``range_partitioned_*`` operator.
+
+    ``Window.orderBy(...)`` with no partition key funnels every row
+    through ONE task (Spark warns ``No Partition Defined``) — the shape
+    that turns a 10^9-row rank into a single-executor job. Per pass:
+
+    1. ``repartitionByRange`` on (parts + order): each task holds a
+       contiguous slice of the (per-group) order, tagged ``_slice``.
+    2. One bounded aggregate per (group, slice). The aggregates of ALL
+       passes are unioned (columns prefixed ``_p{i}_`` / ``_v{i}_``) and
+       fetched in ONE ``collect`` — one driver round trip per call, since
+       small-job time is dominated by fixed per-job overhead.
+    3. The driver folds each group's slice aggregates, in slice order,
+       into exclusive per-slice offsets (and, for ``count``, the group
+       total ``_n_rows``).
+    4. The offsets broadcast-join back on (group, slice) — null-safe on
+       the group keys, so a null group key is one group, as in
+       ``Window.partitionBy`` — and
+       an intra-slice window (partitioned by group and slice, never
+       global) combines its running value with the offset.
+
+    Returns one frame per pass: the input columns (``parts`` first) plus
+    every ``out_col`` as BIGINT, plus ``_n_rows`` for ``count`` passes.
+
+    Contract:
+
+    * ``order`` must be TOTAL (include a tiebreaker): ties spanning a
+      slice boundary would otherwise make the prefix values
+      partition-dependent.
+    * Each post-``repartitionByRange`` frame is PERSISTED before the
+      sidecar action. The sidecar and the caller's final query are
+      separate jobs, and range-boundary sampling re-runs per job (the
+      sampler seed is tied to the RDD id), so without the pin a row near
+      a boundary could change slices between them and silently corrupt
+      the offsets. The guarantee is structural, not scale-dependent.
+    * Sidecar bound: O(partitions + groups) rows per pass, capped at
+      ``max_sidecar_rows``; past it the call raises. For many small
+      groups a plain ``Window.partitionBy(*partition_cols)`` window is
+      the scale-safe plan and the driver coordination buys nothing.
+    * Cache lifetime: the persisted frames back the RETURNED lazy plans
+      and cannot be released here; the bench harness and the driver sim
+      ``clearCache`` between queries.
+    """
+    sliceds, sidecars = [], []
+    for i, p in enumerate(passes):
+        sliced = (
+            p.df.repartitionByRange(*p.parts, *p.order)
+            .withColumn("_slice", F.spark_partition_id())
+            .persist()
+        )
+        sliceds.append(sliced)
+        agg = _MONOIDS[p.monoid][0]
+        sidecars.append(
+            sliced.groupBy(*[F.col(c).alias(f"_p{i}_{c}") for c in p.parts], "_slice")
+            .agg(*[agg(c).alias(f"_v{i}_{j}") for j, (c, _) in enumerate(p.values)])
+            .limit(max_sidecar_rows + 1)
+            .withColumn("_pass", F.lit(i))
+        )
+    rows = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), sidecars
+    ).collect()  # ONE action for every pass's sidecar
+    by_pass: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: r["_slice"]):
+        by_pass.setdefault(r["_pass"], []).append(r)
+
+    outs = []
+    for i, (p, sliced) in enumerate(zip(passes, sliceds)):
+        pass_rows = by_pass.get(i, [])
+        if len(pass_rows) > max_sidecar_rows:
+            raise ValueError(
+                f"{op} sidecar for pass {i} exceeds {max_sidecar_rows} "
+                "(group, slice) rows — partition_cols cardinality is too "
+                "high for driver-side offset folding; use a plain "
+                "Window.partitionBy(*partition_cols) window directly "
+                "(scale-safe when groups are many and small)"
+            )
+        _agg, window_agg, combine, fold, zero = _MONOIDS[p.monoid]
+        keys = [f"_p{i}_{c}" for c in p.parts]
+        vals = [f"_v{i}_{j}" for j in range(len(p.values))]
+        offs = [f"_off{j}" for j in range(len(p.values))]
+        with_total = p.monoid == "count"
+        groups: dict[tuple, list] = {}
+        for r in pass_rows:
+            groups.setdefault(tuple(r[k] for k in keys), []).append(r)
+        lookup_rows = []
+        for group, group_rows in groups.items():
+            acc, pre = [zero] * len(vals), []
+            for r in group_rows:
+                pre.append((*group, r["_slice"], *acc))
+                acc = [fold(a, r[v]) for a, v in zip(acc, vals)]
+            lookup_rows += [(*t, *acc) for t in pre] if with_total else pre
+        schema = T.StructType(
+            [T.StructField(k, p.df.schema[c].dataType) for k, c in zip(keys, p.parts)]
+            + [T.StructField(f"_p{i}__slice", T.IntegerType(), False)]
+            + [T.StructField(o, T.LongType(), zero is None) for o in offs]
+            + ([T.StructField("_n_rows", T.LongType(), False)] if with_total else [])
+        )
+        lookup = F.broadcast(p.df.sparkSession.createDataFrame(lookup_rows, schema))
+        # ``_slice`` is never null: ``==`` keeps a one-long-key relation
+        on = [F.col(c).eqNullSafe(lookup[k]) for c, k in zip(p.parts, keys)]
+        on.append(F.col("_slice") == lookup[f"_p{i}__slice"])
+        w = (
+            Window.partitionBy(*p.parts, "_slice")
+            .orderBy(*p.order)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        out = sliced.join(lookup, functools.reduce(operator.and_, on))
+        for (c, out_col), off in zip(p.values, offs):
+            out = out.withColumn(
+                out_col, combine(window_agg(c).over(w), F.col(off)).cast("long")
+            )
+        out = out.drop("_slice", *keys, f"_p{i}__slice", *offs)
+        outs.append(out.select(*p.parts, *[c for c in out.columns if c not in p.parts]))
+    return outs
+
+
+def _ntile(n: int) -> Column:
+    """The standard ``ntile(n)`` arithmetic over the ``_rank`` /
+    ``_n_rows`` columns of a ``count`` pass: the first ``n_rows mod n``
+    buckets get the extra row."""
+    rank, n_rows = F.col("_rank"), F.col("_n_rows")
+    q = (n_rows / n).cast("long")  # floor: both operands >= 0
+    rem = n_rows % n
+    threshold = rem * (q + 1)
+    return F.when(
+        rank <= threshold, ((rank - 1) / (q + 1)).cast("long") + 1
+    ).otherwise(rem + ((rank - threshold - 1) / q).cast("long") + 1).cast("int")
+
+
+def _one_pass(df, order, partition_cols, monoid, values, max_rows, op) -> DataFrame:
+    return _prefix_scan(
+        [_Pass(df, order, list(partition_cols or []), monoid, values)],
+        max_rows,
+        op,
+    )[0]
+
+
 def range_partitioned_ntile(
     df: DataFrame,
     n: int,
@@ -39,107 +212,16 @@ def range_partitioned_ntile(
     out_col: str = "tile",
     max_sidecar_rows: int = 100_000,
 ) -> DataFrame:
-    """EXACT ``ntile(n)`` without a single-partition global sort.
-
-    ``Window.orderBy(...)`` with no partition key funnels every row through
-    ONE task (Spark warns ``No Partition Defined``) — the shape that turns a
-    10^9-row rank into a single-executor job. This operator computes the
-    identical bucket assignment scale-safely:
-
-    1. ``repartitionByRange`` on (partition_cols + order): each task holds a
-       contiguous slice of the global (or per-group) order.
-    2. One bounded aggregate counts rows per (group, slice); the counts —
-       at most ``P + groups_spanning_boundaries`` rows — come to the driver
-       to fold slice offsets and group totals (the same bounded-sidecar
-       coordination as the k-means/IVF fits).
-    3. Offsets broadcast-join back; ``row_number`` over the (group, slice)-
-       partitioned window + offset = the exact global rank; the standard
-       ntile arithmetic (first ``n_rows mod n`` buckets get the extra row)
-       maps rank -> bucket.
-
-    ``order`` must be a TOTAL order (include a tiebreaker): ties spanning a
-    range boundary would otherwise make ranks partition-dependent — the
-    same determinism contract as ``ntile`` itself needs for oracle parity.
-
-    CARDINALITY BOUND (VERDICT r5 #4): the slice-count sidecar is
-    O(partitions + distinct partition_cols groups) — fine for the current
-    uses (25 nations / global) and any dashboard-grade grouping, but a
-    HIGH-cardinality group column (millions of groups) would funnel one
-    sidecar row per group through the driver. The collect is therefore
-    capped at ``max_sidecar_rows`` and raises loudly past it; for such
-    shapes use a plain per-group ``Window.partitionBy(groups).orderBy``
-    ntile instead — with many small groups the per-group window is the
-    scale-safe plan (no group funnels one task), and this operator's
-    driver coordination buys nothing.
-
-    Matches ``ntile`` bit-for-bit (property-tested vs ``Window.orderBy``
-    at every n/partitioning), so DuckDB ``ntile`` oracles stay valid.
-
-    The post-``repartitionByRange`` frame is PERSISTED (r11 ADVICE, low —
-    same structural guarantee as ``range_partitioned_running_sum``): the
-    sidecar collect and the caller's final query are two separate jobs
-    and range-boundary sampling re-runs per job, so without the pin a
-    boundary row could change slices between them and corrupt the exact
-    offsets. Cache lifetime: the persisted frame backs the RETURNED lazy
-    plan and cannot be released in-function; the bench harness / driver
-    sim clearCache between queries.
-    """
-    parts = list(partition_cols or [])
-    sliced = df.repartitionByRange(*parts, *order).withColumn(
-        "_slice", F.spark_partition_id()
-    ).persist()
-    counts = (
-        sliced.groupBy(*parts, "_slice")
-        .count()
-        .limit(max_sidecar_rows + 1)
-        .collect()
-    )  # bounded: contiguous slices -> ~P + #groups rows
-    if len(counts) > max_sidecar_rows:
-        raise ValueError(
-            f"range_partitioned_ntile sidecar exceeds {max_sidecar_rows} "
-            "(group, slice) rows — partition_cols cardinality is too high "
-            "for driver-side offset folding; use "
-            "Window.partitionBy(*partition_cols).orderBy(*order) with "
-            "ntile directly (scale-safe when groups are many and small)"
-        )
-    key = lambda r: tuple(r[c] for c in parts)
-    by_group: dict[tuple, list] = {}
-    for r in sorted(counts, key=lambda r: r["_slice"]):
-        by_group.setdefault(key(r), []).append(r)
-    lookup_rows = []
-    for rows in by_group.values():
-        total = sum(r["count"] for r in rows)
-        offset = 0
-        for r in rows:
-            lookup_rows.append(
-                tuple(r[c] for c in parts) + (r["_slice"], offset, total)
-            )
-            offset += r["count"]
-    from pyspark.sql import types as T
-
-    part_fields = [] if not parts else list(df.select(*parts).schema.fields)
-    schema = T.StructType(
-        part_fields
-        + [
-            T.StructField("_slice", T.IntegerType(), False),
-            T.StructField("_offset", T.LongType(), False),
-            T.StructField("_n_rows", T.LongType(), False),
-        ]
+    """EXACT ``ntile(n)`` over ``order`` (per ``partition_cols`` group)
+    without a single-partition global sort: rank = ``row_number`` + the
+    count offset of :func:`_prefix_scan`, then the ntile arithmetic.
+    Matches ``Window`` ntile bit-for-bit, so DuckDB ``ntile`` oracles stay
+    valid. Input columns pass through plus ``out_col``."""
+    ranked = _one_pass(
+        df, order, partition_cols, "count", [(None, "_rank")],
+        max_sidecar_rows, "range_partitioned_ntile",
     )
-    lookup = df.sparkSession.createDataFrame(lookup_rows, schema)
-    w = Window.partitionBy(*parts, "_slice").orderBy(*order)
-    rank = (F.row_number().over(w) + F.col("_offset")).cast("long")
-    q = (F.col("_n_rows") / n).cast("long")  # floor: both operands >= 0
-    rem = F.col("_n_rows") % n
-    threshold = rem * (q + 1)
-    tile = F.when(
-        rank <= threshold, ((rank - 1) / (q + 1)).cast("long") + 1
-    ).otherwise(rem + ((rank - threshold - 1) / q).cast("long") + 1)
-    return (
-        sliced.join(F.broadcast(lookup), parts + ["_slice"])
-        .withColumn(out_col, tile.cast("int"))
-        .drop("_slice", "_offset", "_n_rows")
-    )
+    return ranked.withColumn(out_col, _ntile(n)).drop("_rank", "_n_rows")
 
 
 def range_partitioned_ntiles(
@@ -149,176 +231,20 @@ def range_partitioned_ntiles(
     max_sidecar_rows: int = 100_000,
 ) -> DataFrame:
     """SEVERAL exact global ``ntile`` columns over the same frame with ONE
-    bounded sidecar action (guide §2.6 — r14: chaining
-    ``range_partitioned_ntile`` once per axis runs one EAGER sidecar
-    collect per axis, serialized; rfm_segments paid 3). ``specs`` is
-    ``[(n, order, out_col), ...]``; each order must be TOTAL (same
-    contract as the single-spec operator) and ``key_cols`` must uniquely
-    identify rows (the tile frames re-join on them). Returns one row per
-    input row with ``key_cols`` + every ``out_col`` — bit-identical tile values to
-    the chained form, because each tile depends only on ``df`` and its
-    own order (the chained form merely carries earlier tile columns
-    along; it never feeds them into later orders).
-
-    Shape: one ``repartitionByRange`` per spec (persisted — same
-    structural slice-pinning guarantee as the single-spec operator), the
-    per-slice counts of ALL specs unioned into ONE collect, offsets fold
-    driver-side per spec, and the tile frames join back on ``key_cols``
-    (skinny: keys + one int each). No global single-task window
-    anywhere; the sidecar stays O(specs * partitions).
-
-    Cache lifetime: each persisted sliced frame backs the RETURNED lazy
-    plan and cannot be released in-function; the bench harness / driver
-    sim clearCache between queries (same contract as the single-spec
-    operators).
-    """
-    sliceds = [
-        df.repartitionByRange(*order)
-        .withColumn("_slice", F.spark_partition_id())
-        .persist()
-        for _n, order, _out in specs
+    sidecar action. ``specs`` is ``[(n, order, out_col), ...]``, each
+    order TOTAL; ``key_cols`` must uniquely identify rows, since the
+    per-spec tile frames (keys + one int each) re-join on them. Returns
+    ``key_cols`` + every ``out_col``, one row per input row."""
+    ranked = _prefix_scan(
+        [_Pass(df, order, [], "count", [(None, "_rank")]) for _, order, _ in specs],
+        max_sidecar_rows,
+        "range_partitioned_ntiles",
+    )
+    tiles = [
+        r.select(*key_cols, _ntile(n).alias(out_col))
+        for r, (n, _order, out_col) in zip(ranked, specs)
     ]
-    counts_union = None
-    for i, sliced in enumerate(sliceds):
-        branch = (
-            sliced.groupBy("_slice")
-            .count()
-            .limit(max_sidecar_rows + 1)
-            .select(
-                F.lit(i).alias("_spec"), "_slice", F.col("count").alias("_v")
-            )
-        )
-        counts_union = (
-            branch if counts_union is None else counts_union.unionByName(branch)
-        )
-    rows = counts_union.collect()  # ONE action for every spec's sidecar
-    by_spec: dict[int, list] = {}
-    for r in rows:
-        by_spec.setdefault(r["_spec"], []).append(r)
-    from pyspark.sql import types as T
-
-    out: DataFrame | None = None
-    for i, (n, order, out_col) in enumerate(specs):
-        spec_rows = sorted(by_spec.get(i, []), key=lambda r: r["_slice"])
-        if len(spec_rows) > max_sidecar_rows:
-            raise ValueError(
-                f"range_partitioned_ntiles sidecar for spec {i} exceeds "
-                f"{max_sidecar_rows} slice rows"
-            )
-        total = sum(r["_v"] for r in spec_rows)
-        lookup_rows = []
-        offset = 0
-        for r in spec_rows:
-            lookup_rows.append((r["_slice"], offset, total))
-            offset += r["_v"]
-        schema = T.StructType(
-            [
-                T.StructField("_slice", T.IntegerType(), False),
-                T.StructField("_offset", T.LongType(), False),
-                T.StructField("_n_rows", T.LongType(), False),
-            ]
-        )
-        lookup = df.sparkSession.createDataFrame(lookup_rows, schema)
-        w = Window.partitionBy("_slice").orderBy(*order)
-        rank = (F.row_number().over(w) + F.col("_offset")).cast("long")
-        q = (F.col("_n_rows") / n).cast("long")
-        rem = F.col("_n_rows") % n
-        threshold = rem * (q + 1)
-        tile = F.when(
-            rank <= threshold, ((rank - 1) / (q + 1)).cast("long") + 1
-        ).otherwise(rem + ((rank - threshold - 1) / q).cast("long") + 1)
-        tiles = (
-            sliceds[i]
-            .join(F.broadcast(lookup), "_slice")
-            .select(*key_cols, tile.cast("int").alias(out_col))
-        )
-        out = tiles if out is None else out.join(tiles, key_cols)
-    assert out is not None, "specs must be non-empty"
-    return out
-
-
-def range_partitioned_running_sum_batch(
-    inputs: list[tuple[DataFrame, list[Column], str]],
-    prefix: str = "running_",
-    max_sidecar_rows: int = 100_000,
-) -> list[DataFrame]:
-    """Batch form of :func:`range_partitioned_running_sum` for several
-    independent (frame, order, value_col) passes with NO partition_cols:
-    all bounded sidecar aggregates are fetched in ONE Spark action
-    (guide §2.6 — r14: sorted_neighborhood_pairs ran one serialized
-    sidecar collect per sort key). Per-pass output is identical to
-    ``range_partitioned_running_sum(df, order, [value_col])``: input
-    columns pass through plus ``{prefix}{value_col}``.
-
-    Same structural guarantees as the single-pass operator: each
-    post-``repartitionByRange`` frame is persisted before the sidecar
-    action so slice assignments are pinned across the sidecar job and
-    the caller's final job; the per-pass sidecar stays bounded by
-    ``max_sidecar_rows`` with the same loud failure.
-
-    Cache lifetime: each persisted sliced frame backs its RETURNED lazy
-    plan and cannot be released in-function; the bench harness / driver
-    sim clearCache between queries (same contract as the single-pass
-    operator).
-    """
-    sliceds = [
-        df.repartitionByRange(*order)
-        .withColumn("_slice", F.spark_partition_id())
-        .persist()
-        for df, order, _vc in inputs
-    ]
-    counts_union = None
-    for i, (sliced, (_df, _order, vc)) in enumerate(zip(sliceds, inputs)):
-        branch = (
-            sliced.groupBy("_slice")
-            .agg(F.sum(vc).alias("_v"))
-            .limit(max_sidecar_rows + 1)
-            .select(F.lit(i).alias("_spec"), "_slice", "_v")
-        )
-        counts_union = (
-            branch if counts_union is None else counts_union.unionByName(branch)
-        )
-    rows = counts_union.collect()  # ONE action for every pass's sidecar
-    by_spec: dict[int, list] = {}
-    for r in rows:
-        by_spec.setdefault(r["_spec"], []).append(r)
-    from pyspark.sql import types as T
-
-    outs: list[DataFrame] = []
-    for i, (df, order, vc) in enumerate(inputs):
-        spec_rows = sorted(by_spec.get(i, []), key=lambda r: r["_slice"])
-        if len(spec_rows) > max_sidecar_rows:
-            raise ValueError(
-                f"range_partitioned_running_sum_batch sidecar for pass {i} "
-                f"exceeds {max_sidecar_rows} slice rows"
-            )
-        lookup_rows = []
-        offset = 0
-        for r in spec_rows:
-            lookup_rows.append((r["_slice"], offset))
-            offset += r["_v"] or 0
-        schema = T.StructType(
-            [
-                T.StructField("_slice", T.IntegerType(), False),
-                T.StructField(f"_off_{vc}", T.LongType(), False),
-            ]
-        )
-        lookup = df.sparkSession.createDataFrame(lookup_rows, schema)
-        w = (
-            Window.partitionBy("_slice")
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        outs.append(
-            sliceds[i]
-            .join(F.broadcast(lookup), "_slice")
-            .withColumn(
-                f"{prefix}{vc}",
-                (F.sum(vc).over(w) + F.col(f"_off_{vc}")).cast("long"),
-            )
-            .drop("_slice", f"_off_{vc}")
-        )
-    return outs
+    return functools.reduce(lambda a, b: a.join(b, key_cols), tiles)
 
 
 def range_partitioned_running_sum(
@@ -329,94 +255,55 @@ def range_partitioned_running_sum(
     prefix: str = "running_",
     max_sidecar_rows: int = 100_000,
 ) -> DataFrame:
-    """EXACT inclusive running sums of ``value_cols`` in ``order`` without
-    a single-partition global window — the generalization of
-    ``range_partitioned_ntile``'s rework (VERDICT r4) to arbitrary
-    prefix aggregation (cumulative counts, Pareto curves, rank sums,
-    CDF-style statistics).
-
-    Same coordination recipe: (1) ``repartitionByRange`` on
-    (partition_cols + order) so each task holds a contiguous slice of the
-    (per-group) order; (2) ONE bounded aggregate sums each value column
-    per (group, slice) — O(partitions + groups) sidecar rows fold to
-    per-slice offsets driver-side (the same bounded-sidecar pattern and
-    the same ``max_sidecar_rows`` loud-failure guard); (3) offsets
-    broadcast back and an intra-slice window (partitioned by slice —
-    never global) adds the local prefix.
-
-    ``order`` must be a TOTAL order (include a tiebreaker): the running
-    value at a tie would otherwise be partition-dependent. Output adds
-    ``{prefix}{col}`` per value column; input columns pass through.
-
-    The post-``repartitionByRange`` frame is PERSISTED (r11 ADVICE, low):
-    the sidecar collect and the caller's final query are two separate
-    Spark jobs, and range-boundary sampling re-runs per job (sampler seed
-    is tied to the RDD id), so with a sub-sampled key set a row near a
-    boundary could land in different slices across the two jobs and
-    silently corrupt the exact offsets. Persisting ``sliced`` (which the
-    sidecar aggregate fully materializes) pins one set of slice
-    assignments for both jobs — the guarantee is structural, not
-    scale-dependent. Cache lifetime: the persisted frame backs the
-    RETURNED lazy plan and cannot be released in-function; the bench
-    harness / driver sim clearCache between queries.
-    """
-    parts = list(partition_cols or [])
-    sliced = df.repartitionByRange(*parts, *order).withColumn(
-        "_slice", F.spark_partition_id()
-    ).persist()
-    counts = (
-        sliced.groupBy(*parts, "_slice")
-        .agg(*[F.sum(c).alias(c) for c in value_cols])
-        .limit(max_sidecar_rows + 1)
-        .collect()
+    """EXACT inclusive running sums of ``value_cols`` in ``order`` (per
+    ``partition_cols`` group) without a single-partition global window —
+    cumulative counts, Pareto curves, rank sums, CDF-style statistics.
+    Input columns pass through plus ``{prefix}{col}`` per value column."""
+    return _one_pass(
+        df, order, partition_cols, "sum",
+        [(c, f"{prefix}{c}") for c in value_cols],
+        max_sidecar_rows, "range_partitioned_running_sum",
     )
-    if len(counts) > max_sidecar_rows:
-        raise ValueError(
-            f"range_partitioned_running_sum sidecar exceeds "
-            f"{max_sidecar_rows} (group, slice) rows — partition_cols "
-            "cardinality is too high for driver-side offset folding; use "
-            "a Window.partitionBy(*partition_cols) running sum directly "
-            "(scale-safe when groups are many and small)"
-        )
-    key = lambda r: tuple(r[c] for c in parts)
-    by_group: dict[tuple, list] = {}
-    for r in sorted(counts, key=lambda r: r["_slice"]):
-        by_group.setdefault(key(r), []).append(r)
-    lookup_rows = []
-    for rows in by_group.values():
-        offsets = [0] * len(value_cols)
-        for r in rows:
-            lookup_rows.append(
-                tuple(r[c] for c in parts)
-                + (r["_slice"],)
-                + tuple(offsets)
-            )
-            for i, c in enumerate(value_cols):
-                offsets[i] += r[c] or 0
-    from pyspark.sql import types as T
 
-    part_fields = [] if not parts else list(df.select(*parts).schema.fields)
-    schema = T.StructType(
-        part_fields
-        + [T.StructField("_slice", T.IntegerType(), False)]
-        + [
-            T.StructField(f"_off_{c}", T.LongType(), False)
-            for c in value_cols
-        ]
+
+def range_partitioned_running_sum_batch(
+    inputs: list[tuple[DataFrame, list[Column], str]],
+    prefix: str = "running_",
+    max_sidecar_rows: int = 100_000,
+) -> list[DataFrame]:
+    """:func:`range_partitioned_running_sum` for several independent
+    ungrouped ``(frame, order, value_col)`` passes with ONE sidecar
+    action. Per pass: input columns pass through plus
+    ``{prefix}{value_col}``."""
+    return _prefix_scan(
+        [
+            _Pass(df, order, [], "sum", [(vc, f"{prefix}{vc}")])
+            for df, order, vc in inputs
+        ],
+        max_sidecar_rows,
+        "range_partitioned_running_sum_batch",
     )
-    lookup = df.sparkSession.createDataFrame(lookup_rows, schema)
-    w = (
-        Window.partitionBy(*parts, "_slice")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+
+def range_partitioned_running_max(
+    df: DataFrame,
+    order: list[Column],
+    value_cols: list[str],
+    partition_cols: list[str] | None = None,
+    prefix: str = "runmax_",
+    max_sidecar_rows: int = 100_000,
+) -> DataFrame:
+    """EXACT inclusive running MAX of ``value_cols`` in ``order`` (per
+    ``partition_cols`` group) without a single-partition global window.
+    The first slice's offset is NULL and ``greatest`` skips it (the max
+    identity). ``value_cols`` must be BIGINT-compatible (cast timestamps
+    to epoch seconds first). Input columns pass through plus
+    ``{prefix}{col}``."""
+    return _one_pass(
+        df, order, partition_cols, "max",
+        [(c, f"{prefix}{c}") for c in value_cols],
+        max_sidecar_rows, "range_partitioned_running_max",
     )
-    out = sliced.join(F.broadcast(lookup), parts + ["_slice"])
-    for c in value_cols:
-        out = out.withColumn(
-            f"{prefix}{c}",
-            (F.sum(c).over(w) + F.col(f"_off_{c}")).cast("long"),
-        )
-    return out.drop("_slice", *[f"_off_{c}" for c in value_cols])
 
 
 def sharded_top_per_group(
@@ -461,93 +348,6 @@ def sharded_top_per_group(
         .filter(F.col("_r2") <= k)
         .drop("_r2")
     )
-
-
-def range_partitioned_running_max(
-    df: DataFrame,
-    order: list[Column],
-    value_cols: list[str],
-    partition_cols: list[str] | None = None,
-    prefix: str = "runmax_",
-    max_sidecar_rows: int = 100_000,
-) -> DataFrame:
-    """EXACT inclusive running MAX in ``order`` without a single-
-    partition global window — the MAX-monoid member of the range-
-    partitioned prefix family (sum: ``range_partitioned_running_sum``;
-    ntile: ``range_partitioned_ntile``). Same recipe: range-partition on
-    the order, one bounded per-(group, slice) max sidecar folded to
-    prefix offsets driver-side, offsets broadcast back, and
-    ``greatest(intra-slice running max, offset)`` — the offset for the
-    first slice is NULL and ``greatest`` skips it (the max identity).
-
-    ``value_cols`` must be BIGINT-compatible (cast timestamps to epoch
-    seconds first). ``order`` must be total for deterministic output.
-
-    The post-``repartitionByRange`` frame is PERSISTED (r11 ADVICE, low —
-    same structural guarantee as ``range_partitioned_running_sum``): the
-    sidecar collect and the caller's final query are two separate jobs
-    and range-boundary sampling re-runs per job, so without the pin a
-    boundary row could change slices between them and corrupt the exact
-    offsets. Cache lifetime: the persisted frame backs the RETURNED lazy
-    plan and cannot be released in-function; the bench harness / driver
-    sim clearCache between queries.
-    """
-    parts = list(partition_cols or [])
-    sliced = df.repartitionByRange(*parts, *order).withColumn(
-        "_slice", F.spark_partition_id()
-    ).persist()
-    counts = (
-        sliced.groupBy(*parts, "_slice")
-        .agg(*[F.max(c).alias(c) for c in value_cols])
-        .limit(max_sidecar_rows + 1)
-        .collect()
-    )
-    if len(counts) > max_sidecar_rows:
-        raise ValueError(
-            f"range_partitioned_running_max sidecar exceeds "
-            f"{max_sidecar_rows} (group, slice) rows — partition_cols "
-            "cardinality is too high for driver-side offset folding; use "
-            "a Window.partitionBy(*partition_cols) running max directly"
-        )
-    key = lambda r: tuple(r[c] for c in parts)
-    by_group: dict[tuple, list] = {}
-    for r in sorted(counts, key=lambda r: r["_slice"]):
-        by_group.setdefault(key(r), []).append(r)
-    lookup_rows = []
-    for rows in by_group.values():
-        prev: list = [None] * len(value_cols)
-        for r in rows:
-            lookup_rows.append(
-                tuple(r[c] for c in parts) + (r["_slice"],) + tuple(prev)
-            )
-            for i, c in enumerate(value_cols):
-                v = r[c]
-                if v is not None and (prev[i] is None or v > prev[i]):
-                    prev[i] = v
-    from pyspark.sql import types as T
-
-    part_fields = [] if not parts else list(df.select(*parts).schema.fields)
-    schema = T.StructType(
-        part_fields
-        + [T.StructField("_slice", T.IntegerType(), False)]
-        + [
-            T.StructField(f"_off_{c}", T.LongType(), True)
-            for c in value_cols
-        ]
-    )
-    lookup = df.sparkSession.createDataFrame(lookup_rows, schema)
-    w = (
-        Window.partitionBy(*parts, "_slice")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = sliced.join(F.broadcast(lookup), parts + ["_slice"])
-    for c in value_cols:
-        out = out.withColumn(
-            f"{prefix}{c}",
-            F.greatest(F.max(c).over(w), F.col(f"_off_{c}")).cast("long"),
-        )
-    return out.drop("_slice", *[f"_off_{c}" for c in value_cols])
 
 
 def skyline_2d(

@@ -22,74 +22,6 @@ from . import warehouse  # noqa: E402,F401
 
 DRIVER_WINDOW = 50  # rows the driver's correctness gate records per round
 
-# The intended round-9 recorded window, in priority order (same asserted-
-# list mechanism as r5-r8): an explicit list asserted to be EXACTLY
-# DRIVER_WINDOW long and duplicate-free, pinned by tests/test_plans.py
-# against list(REGISTRY)[:DRIVER_WINDOW].
-#
-# VERDICT r8 ask #1: after r08, every registry query has a recorded row,
-# so r09 is pure refresh rotation — the 38 queries whose newest record is
-# still r03 (computed from CORRECTNESS_r01-r08; ROADMAP.md r09 guidance
-# lists 36 + the two reference-parity queries top_brands /
-# weighted_nova_average) — plus the two rows-only tiers being promoted to
-# full oracles this round (VERDICT r8 ask #4) and slots for new r09
-# queries (r04 refreshes fill any slot a new query does not claim).
-_R9_WINDOW = [
-    # -- promoted from rows-only to full DuckDB oracle this round
-    "neardup_centrality",  # 6-iteration PageRank as an unrolled CTE
-    "bpe_merge_table",  # deterministic merge sequence as a recursive CTE
-    # -- the 38 r03-stale refreshes (newest record = r03)
-    "corpus_split_counts",
-    "curated_corpus",
-    "dedup_canonical_keep",
-    "dedup_canonical_map",
-    "dedup_exact_groups",
-    "dedup_keep_list",
-    "dedup_minhash_pairs",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_ngram_jaccard_pairs_prefix",
-    "dedup_simhash_pairs",
-    "doc_stats",
-    "document_chunks",
-    "embedding_label_centroids",
-    "error_aftermath_clicks",
-    "events_hourly",
-    "events_props_buckets",
-    "events_sliding_2h",
-    "lang_agreement",
-    "lang_source_rank",
-    "language_id",
-    "media_byte_stats",
-    "media_frame_sample",
-    "packed_sequences",
-    "pii_scrub_stats",
-    "pricing_summary",
-    "purchase_asof_view",
-    "shipping_priority",
-    "simhash_fingerprints",
-    "similarity_ann_lsh_multitable_topk",
-    "similarity_ann_lsh_topk",
-    "similarity_bruteforce_topk",
-    "similarity_ivf_topk",
-    "token_fingerprints",
-    "top_brands",
-    "top_packaging",
-    "user_sessions",
-    "vocab_top_tokens",
-    "weighted_nova_average",
-    # -- new round-9 queries (first recording; these swapped in for the
-    #    oldest r04 refreshes as they landed — new rows beat refreshes)
-    "dedup_component_sizes_bucketed",  # bucketed co-located CC rounds
-    "minhash_estimate_error",  # signature-vs-exact Jaccard calibration
-    "ngram_novelty_by_source",  # first-occurrence novelty share
-    "embedding_quantization_error",  # int8 scalar-quantization audit
-    "bpe_compression_curve",  # merge-budget planning curve
-    "hourly_cusum_alarms",  # prefix-sum CUSUM drift detection
-    "session_gap_sensitivity",  # sessionization threshold sweep
-    "exact_dup_arrival_curve",  # marginal-novelty by arrival decile
-    "quality_filter_kappa",  # rule-vs-model filter agreement
-    "bloom_pruned_order_join",  # oldest-r04 refresh fills the last slot
-]
 # The rows-only tiers had their markers recorded in r05
 # (similarity_{ivf_kmeans,pq,ivfpq}_topk) / r08 (packed_sequences_ffd) and
 # stay OUT of refresh rotation. Why each MUST stay rows-only (VERDICT r11
@@ -104,145 +36,6 @@ _R9_WINDOW = [
 # Python-parity pytest plus the bins<=next-fit bound). approx_stats LEFT
 # this tier in r12: it now emits an invariant-verdict table (exact counts
 # + sketch-within-declared-error booleans) that the full hash gate checks.
-
-# Queries built AFTER the r09 window froze (the 50 slots above were already
-# claimed by the refresh-rotation contract: 2 promotions + all 38 r03-stale
-# + 10 flex). These are the declared FIRST entries of the r10 window — the
-# driver records them next round. Pinned by tests/test_plans.py: the set of
-# unrecorded registry queries outside the r09 window must be EXACTLY this
-# list, so a new query can never silently fall out of the recording
-# rotation.
-_R10_FIRSTS = [
-    "neardup_source_matrix",  # cross-source near-dup rollup
-    "simhash_hamming_histogram",  # pigeonhole-banded distance calibration
-    "source_psi_drift",  # PSI drift gate on integer length buckets
-    "interarrival_profile",  # gap-level Poisson/burstiness lens
-    "source_centroid_similarity",  # mixture-design redundancy matrix
-    "jl_projection_distortion",  # Rademacher JL re-index audit
-    "monthly_revenue_seasonality",  # 13-month centered-MA seasonal ratio
-    "label_silhouette",  # centroid-form cluster-quality audit
-    "similarity_jl_rerank_topk",  # 16-d JL shortlist + exact re-rank ANN
-    "dup_quality_correlation",  # near-dup cluster size x quality profile
-    "lang_length_kruskal",  # k-group rank omnibus (tie-corrected H)
-    "minhash_band_sweep",  # LSH (bands x rows) S-curve tuning table
-    "session_conversion_rate",  # in-session ordered view->purchase funnel
-]
-
-# The intended round-10 recorded window (VERDICT r9 ask #1): the 13
-# _R10_FIRSTS lead (first-ever driver recording for each), then the 37
-# alphabetically-first of the 45 queries whose newest record is r04 (the
-# stalest refresh rotation; the remaining 8 r04-stale queries are the
-# declared head of the r11 refresh list). Computed-and-asserted by
-# tests/test_plans.py exactly as in r5-r9.
-_R10_WINDOW = list(_R10_FIRSTS) + [
-    "bm25_search",
-    "clickers_not_buyers",
-    "cohort_retention",
-    "conjunctive_search",
-    "contrastive_negatives",
-    "conversion_delay",
-    "customer_order_distribution",
-    "customers_without_orders",
-    "dedup_component_sizes",
-    "dedup_embedding_pairs",
-    "disjunctive_part_revenue",
-    "doc_length_spearman",
-    "dominant_part_suppliers",
-    "dq_core_violations",
-    "eval_quota_split",
-    "events_hourly_gapfill",
-    "funnel_conversion",
-    "hourly_anomalies",
-    "idle_rich_customers",
-    "lineitem_measures_long",
-    "local_supplier_volume",
-    "nation_market_share",
-    "nation_trade_volume",
-    "nation_year_profit",
-    "order_marginals_grouping_sets",
-    "part_supplier_counts",
-    "parts_with_orders",
-    "pmi_collocations",
-    "returned_item_customers",
-    "returnflag_pivot",
-    "returns_rollup",
-    "scd2_customer_segment",
-    "segment_nation_stats",
-    "segment_revenue_percentiles",
-    "similarity_lsh_multiprobe_topk",
-    "small_quantity_revenue",
-    "sole_late_suppliers",
-]
-
-# Queries built AFTER the r10 window froze; they lead the r11 window.
-# Pinned by tests/test_plans.py: the set of unrecorded registry queries
-# outside the r10 window must be EXACTLY this list.
-_R11_FIRSTS: list[str] = [
-    "repetition_signals",  # Gopher within-doc repetition fractions
-    "source_temperature_weights",  # tau=2 mixture weights + epoch audit
-    "padding_waste_curve",  # length-bucketed batching planner
-]
-
-# The intended round-11 recorded window (VERDICT r10 ask #1): the 3
-# _R11_FIRSTS lead (first-ever driver recording for each), then the 8
-# remaining r04-stale queries (the declared head of the r11 refresh list
-# since r10 froze), then the alphabetically-first 39 of the 44
-# ORACLE-BEARING queries whose newest record is r05 (the next-stalest
-# rotation; the 4 rows-only r05 markers — approx_stats,
-# similarity_{ivf_kmeans,pq,ivfpq}_topk — stay out of refresh rotation as
-# in r09, so every window row is the full rows+schema+hash gate).
-# Computed-and-asserted by tests/test_plans.py exactly as in r5-r10.
-_R11_WINDOW = list(_R11_FIRSTS) + [
-    # -- the 8 r04-stale holdovers (newest record = r04)
-    "status_priority_cube",
-    "top_customer_per_nation",
-    "top_revenue_supplier",
-    "user_value_locf",
-    "value_winsorized",
-    "viewers_and_buyers",
-    "weighted_doc_sample",
-    "zipf_profile",
-    # -- the 39 alphabetically-first oracle-bearing r05-stale refreshes
-    "cross_doc_gram_share",
-    "customer_order_history",
-    "decontamination_overlap",
-    "dedup_exact_substring_pairs",
-    "dedup_substring_trim_plan",
-    "distinct_sketch",
-    "doc_length_corr",
-    "dsir_bucket_model",
-    "dsir_selected_sample",
-    "event_transition_matrix",
-    "event_user_skew",
-    "exact_stats",
-    "heavy_hitters_cms",
-    "incremental_dedup_verdicts",
-    "large_volume_orders",
-    "late_shipment_priority",
-    "media_dedup_groups",
-    "mixture_epoch_counts",
-    "nation_spend_deciles",
-    "neardup_degree_histogram",
-    "neardup_triangle_census",
-    "orders_by_year_month",
-    "priority_shipment_counts",
-    "promo_revenue_ratio",
-    "quantity_histogram",
-    "quantity_percentiles",
-    "repetition_profile",
-    "revenue_concentration",
-    "semdedup_audit",
-    "similarity_ivfpq_det_topk",
-    "similarity_mmr_topk",
-    "similarity_pq_det_topk",
-    "similarity_quantized_topk",
-    "source_capped_docs",
-    "source_drift_kl",
-    "stratified_source_sample",
-    "token_budget_sample",
-    "tokenized_fingerprints",
-    "tokenizer_compression",
-]
 
 # Queries built AFTER the r11 window froze; they lead the r12 window.
 # Pinned by tests/test_plans.py: the set of never-recorded registry

@@ -2224,20 +2224,19 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation: recency/frequency/monetary quintiles per
     customer (higher = better on every axis — recency ranks DESC so the
     most recent buyers score 5) rolled up to segment cells with the
-    standard champion/at-risk/new labels. All three quintile cuts use
-    range_partitioned_ntile with total orders (ties broken by custkey);
-    monetary snaps to cents."""
+    standard champion/at-risk/new labels. All three quintile cuts come
+    from one range_partitioned_ntiles batch with total orders (ties
+    broken by custkey); monetary snaps to cents."""
     from ..operators.windows import range_partitioned_ntiles
 
     orders = load_table(spark, sf_dir, "orders")
     hz = orders.agg(F.max(F.to_date("o_orderdate")).alias("h"))
-    # persist: each chained range ntile runs an EAGER bounded sidecar
-    # job at build time (slice-count collect), and without the cache
-    # every sidecar re-scans orders and re-runs this aggregate — 4
-    # recomputes of the same per-customer frame (3 sidecars + the final
-    # action). The frame is one row per customer (bounded by the
-    # grouping key, ~1.5% of orders), so the cache is small; lifetime
-    # is bounded by the harness-level clearCache.
+    # persist: the three quintile axes each range-partition ``rfm`` in
+    # their own order, so without the cache each of the three range
+    # branches re-scans orders and re-runs this aggregate. The frame is
+    # one row per customer (bounded by the grouping key, ~1.5% of
+    # orders), so the cache is small; lifetime is bounded by the
+    # harness-level clearCache.
     rfm = (
         orders.crossJoin(F.broadcast(hz))
         .groupBy("o_custkey")
@@ -2252,12 +2251,9 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    # r14 (guide §2.6): the three quintile axes each ran an EAGER bounded
-    # sidecar collect (3 serialized driver round-trips + 3 chained range
-    # shuffles of the widening frame); the batched operator fetches every
-    # axis's slice map in ONE action and joins the three skinny
-    # (custkey, tile) frames back — tile values bit-identical (each axis
-    # depends only on ``rfm`` and its own total order).
+    # One batched sidecar action fetches every axis's slice map at build
+    # time; the three skinny (custkey, tile) frames join back on the key.
+    # Each axis depends only on ``rfm`` and its own total order.
     m = range_partitioned_ntiles(
         rfm,
         specs=[

@@ -255,6 +255,10 @@ def test_range_partitioned_ntile_matches_window_ntile(spark):
 
     rows = [(i % 7, (i * 37) % 101, i) for i in range(523)]
     df = spark.createDataFrame(rows, "g int, v int, id int")
+    # null group keys form one group, as in Window.partitionBy
+    df_null = df.withColumn(
+        "g", F.when(F.col("id") % 5 != 0, F.col("g"))
+    )
     order = [F.desc("v"), F.asc("id")]
     for n in (1, 2, 10, 523, 1000):
         # global (no partition key)
@@ -270,22 +274,23 @@ def test_range_partitioned_ntile_matches_window_ntile(spark):
         }
         assert got == want, f"global ntile({n})"
         # per-group
-        want_g = {
-            (r["id"], r["t"])
-            for r in df.select(
-                "id",
-                F.ntile(n)
-                .over(Window.partitionBy("g").orderBy(*order))
-                .alias("t"),
-            ).collect()
-        }
-        got_g = {
-            (r["id"], r["tile"])
-            for r in range_partitioned_ntile(
-                df, n, order, partition_cols=["g"]
-            ).collect()
-        }
-        assert got_g == want_g, f"grouped ntile({n})"
+        for frame in (df, df_null):
+            want_g = {
+                (r["id"], r["t"])
+                for r in frame.select(
+                    "id",
+                    F.ntile(n)
+                    .over(Window.partitionBy("g").orderBy(*order))
+                    .alias("t"),
+                ).collect()
+            }
+            got_g = {
+                (r["id"], r["tile"])
+                for r in range_partitioned_ntile(
+                    frame, n, order, partition_cols=["g"]
+                ).collect()
+            }
+            assert got_g == want_g, f"grouped ntile({n})"
     # stability under a different shuffle-partition setting
     spark.conf.set("spark.sql.shuffle.partitions", "3")
     try:
@@ -374,27 +379,32 @@ def test_range_partitioned_running_sum_matches_window(spark):
         ).collect()
     }
     assert got == want
-    # grouped + different shuffle partitioning
-    spark.conf.set("spark.sql.shuffle.partitions", "3")
-    try:
-        got_g = {
-            (r["g"], r["id"]): r["running_v"]
-            for r in range_partitioned_running_sum(
-                df, [F.asc("id")], ["v"], partition_cols=["g"]
-            ).collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+    # grouped + different shuffle partitioning; null group keys form
+    # one group, as in Window.partitionBy
+    df_null = df.withColumn("g", F.when(F.col("id") % 5 != 0, F.col("g")))
     wg = (
         Window.partitionBy("g")
         .orderBy("id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    want_g = {
-        (r["g"], r["id"]): r["rv"]
-        for r in df.select("g", "id", F.sum("v").over(wg).alias("rv")).collect()
-    }
-    assert got_g == want_g
+    for frame in (df, df_null):
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        try:
+            got_g = {
+                (r["g"], r["id"]): r["running_v"]
+                for r in range_partitioned_running_sum(
+                    frame, [F.asc("id")], ["v"], partition_cols=["g"]
+                ).collect()
+            }
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", "32")
+        want_g = {
+            (r["g"], r["id"]): r["rv"]
+            for r in frame.select(
+                "g", "id", F.sum("v").over(wg).alias("rv")
+            ).collect()
+        }
+        assert got_g == want_g
     # loud guard at high group cardinality
     with _pytest.raises(ValueError, match="cardinality is too high"):
         range_partitioned_running_sum(
@@ -407,13 +417,12 @@ def test_range_partitioned_running_sum_matches_window(spark):
 
 
 def test_range_partitioned_ntiles_batch_matches_single(spark):
-    """r14: the batched multi-axis ntile (ONE sidecar action) must equal
-    the single-spec operator axis-for-axis — the rfm_segments rework's
-    exactness contract."""
+    """The batched multi-axis ntile equals a plain ``Window`` ntile
+    axis-for-axis — the rfm_segments exactness contract."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from spark_streaming_project_spark.operators.windows import (
-        range_partitioned_ntile,
         range_partitioned_ntiles,
     )
 
@@ -428,23 +437,27 @@ def test_range_partitioned_ntiles_batch_matches_single(spark):
         r["id"]: (r["ta"], r["tb"], r["tc"])
         for r in range_partitioned_ntiles(df, specs, key_cols=["id"]).collect()
     }
-    want = {}
-    for n, order, out in specs:
-        for r in range_partitioned_ntile(df, n, order, out_col="t").collect():
-            want.setdefault(r["id"], {})[out] = r["t"]
-    assert got == {
-        k: (v["ta"], v["tb"], v["tc"]) for k, v in want.items()
+    want = {
+        r["id"]: (r["ta"], r["tb"], r["tc"])
+        for r in df.select(
+            "id",
+            *[
+                F.ntile(n).over(Window.orderBy(*order)).alias(out)
+                for n, order, out in specs
+            ],
+        ).collect()
     }
+    assert got == want
 
 
 def test_range_partitioned_running_sum_batch_matches_single(spark):
-    """r14: the batched multi-pass running sum (ONE sidecar action) must
-    equal the single-pass operator pass-for-pass — the
-    sorted_neighborhood_pairs rework's exactness contract."""
+    """The batched multi-pass running sum equals a plain ``Window``
+    running sum pass-for-pass — the sorted_neighborhood_pairs exactness
+    contract."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from spark_streaming_project_spark.operators.windows import (
-        range_partitioned_running_sum,
         range_partitioned_running_sum_batch,
     )
 
@@ -457,10 +470,74 @@ def test_range_partitioned_running_sum_batch_matches_single(spark):
     outs = range_partitioned_running_sum_batch(inputs)
     for (src, order, vc), got_df in zip(inputs, outs):
         got = {r["id"]: r[f"running_{vc}"] for r in got_df.collect()}
+        w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
         want = {
-            r["id"]: r[f"running_{vc}"]
-            for r in range_partitioned_running_sum(
-                src, order=order, value_cols=[vc]
-            ).collect()
+            r["id"]: r["rv"]
+            for r in src.select("id", F.sum(vc).over(w).alias("rv")).collect()
         }
         assert got == want
+
+
+def test_range_partitioned_ungrouped_lookup_joins_on_slice_alone(spark):
+    """Without partition columns the offset lookup joins on the non-null
+    ``_slice`` alone: one integral broadcast key, not a null-safe
+    (coalesce, isnull) key pair, whose hashed relation is larger and
+    lingers in driver memory until the broadcast is cleaned."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_project_spark.operators.windows import (
+        range_partitioned_ntile,
+        range_partitioned_running_sum,
+    )
+
+    df = spark.range(200).select("id", (F.col("id") * 7 % 13).alias("a"))
+    for out in (
+        range_partitioned_ntile(df, 4, [F.asc("a"), F.asc("id")]),
+        range_partitioned_running_sum(df, [F.asc("id")], ["a"]),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin [_slice" in plan
+        assert "isnull(_slice" not in plan
+
+
+def test_range_partitioned_batches_fetch_sidecars_in_one_collect(
+    spark, monkeypatch
+):
+    """Building a 3-spec ntile batch or a 2-pass running-sum batch runs
+    exactly ONE driver collect (all sidecars unioned) — job counts vary
+    with warm-up, the collect count does not."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_project_spark.operators.windows import (
+        range_partitioned_ntiles,
+        range_partitioned_running_sum_batch,
+    )
+
+    df = spark.range(200).select(
+        F.col("id"), (F.col("id") * 7 % 13).alias("a")
+    )
+    calls = []
+    # the session's concrete DataFrame class (a subclass of the public
+    # pyspark.sql.DataFrame that overrides collect)
+    real_collect = type(df).collect
+
+    def counting_collect(self):
+        calls.append(1)
+        return real_collect(self)
+
+    monkeypatch.setattr(type(df), "collect", counting_collect)
+    range_partitioned_ntiles(
+        df,
+        [
+            (5, [F.asc("a"), F.asc("id")], "ta"),
+            (4, [F.desc("a"), F.asc("id")], "tb"),
+            (10, [F.asc("id")], "tc"),
+        ],
+        key_cols=["id"],
+    )
+    assert len(calls) == 1
+    calls.clear()
+    range_partitioned_running_sum_batch(
+        [(df, [F.asc("a"), F.asc("id")], "a"), (df, [F.desc("id")], "a")]
+    )
+    assert len(calls) == 1

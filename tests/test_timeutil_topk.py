@@ -161,25 +161,28 @@ def test_range_partitioned_running_max_matches_global_window(spark):
             ).collect()
         }
         assert got == want
-        got_g = {
-            (r["g"], r["i"], r["runmax_v"])
-            for r in range_partitioned_running_max(
-                df, order=[F.asc("i")], value_cols=["v"],
-                partition_cols=["g"],
-            ).collect()
-        }
-        want_g = {
-            (r["g"], r["i"], r["w"])
-            for r in df.withColumn(
-                "w",
-                F.max("v").over(
-                    W.partitionBy("g")
-                    .orderBy(F.asc("i"))
-                    .rowsBetween(W.unboundedPreceding, W.currentRow)
-                ),
-            ).collect()
-        }
-        assert got_g == want_g
+        # null group keys form one group, as in Window.partitionBy
+        df_null = df.withColumn("g", F.when(F.col("i") % 5 != 0, F.col("g")))
+        for frame in (df, df_null):
+            got_g = {
+                (r["g"], r["i"], r["runmax_v"])
+                for r in range_partitioned_running_max(
+                    frame, order=[F.asc("i")], value_cols=["v"],
+                    partition_cols=["g"],
+                ).collect()
+            }
+            want_g = {
+                (r["g"], r["i"], r["w"])
+                for r in frame.withColumn(
+                    "w",
+                    F.max("v").over(
+                        W.partitionBy("g")
+                        .orderBy(F.asc("i"))
+                        .rowsBetween(W.unboundedPreceding, W.currentRow)
+                    ),
+                ).collect()
+            }
+            assert got_g == want_g
     spark.conf.set("spark.sql.shuffle.partitions", "8")
 
 
