@@ -12,6 +12,8 @@ coalesces the post-shuffle partitions.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -126,37 +128,46 @@ def weighted_average(
     )
 
 
+def merge_monoid_state(
+    state: DataFrame,
+    delta: DataFrame,
+    keys: list[str],
+    counters: list[str],
+    combine: Callable[[Column, Column], Column],
+) -> DataFrame:
+    """One keyed monoid merge: null-safe full-outer join of ``state`` and
+    ``delta`` on ``keys``, then ``combine(state_col, delta_col)`` per
+    counter, with the absent side of an unmatched key as null. Keys are
+    matched with ``eqNullSafe`` (an equi-join never matches NULL to NULL,
+    so a null key would come back as one more row on every merge) and
+    come out as ``coalesce(state_key, delta_key)``."""
+    s = state.select(*[F.col(c).alias(f"_s_{c}") for c in keys + counters])
+    d = delta.select(*[F.col(c).alias(f"_d_{c}") for c in keys + counters])
+    on = [F.col(f"_s_{k}").eqNullSafe(F.col(f"_d_{k}")) for k in keys]
+    return s.join(d, on, "full_outer").select(
+        *[F.coalesce(F.col(f"_s_{k}"), F.col(f"_d_{k}")).alias(k) for k in keys],
+        *[combine(F.col(f"_s_{c}"), F.col(f"_d_{c}")).alias(c) for c in counters],
+    )
+
+
 def merge_agg_state(state, delta, keys, counters):
     """Merge ADDITIVE aggregate frames (counts, sums — anything with a
     commutative monoid): full-outer join on the grouping keys, missing
-    sides contribute the identity. The primitive behind incremental
-    materialized-view maintenance: state' = state (+) delta, so refreshing
-    a 10^9-group dashboard table costs O(|delta| + touched groups), never
-    a fact-table rescan.
+    sides contribute the identity. Null keys are ordinary groups: two
+    partials of the same null-keyed group sum into one row. The primitive
+    behind incremental materialized-view maintenance: state' = state (+)
+    delta, so refreshing a 10^9-group dashboard table costs O(|delta| +
+    touched groups), never a fact-table rescan.
 
     Non-additive measures (min/max are semigroup-mergeable too and could
     be added; averages must travel as (sum, count) pairs; distinct counts
     need sketches) — callers decompose before merging.
     """
-    from pyspark.sql import functions as F
-
-    s = state.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"_s_{c}") for c in counters],
-    )
-    d = delta.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"_d_{c}") for c in counters],
-    )
-    j = s.join(d, keys, "full_outer")
     zero = F.lit(0)
-    return j.select(
-        *[F.col(k) for k in keys],
-        *[
-            (
-                F.coalesce(F.col(f"_s_{c}"), zero)
-                + F.coalesce(F.col(f"_d_{c}"), zero)
-            ).alias(c)
-            for c in counters
-        ],
+    return merge_monoid_state(
+        state,
+        delta,
+        keys,
+        counters,
+        lambda s, d: F.coalesce(s, zero) + F.coalesce(d, zero),
     )

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import merge_monoid_state
+
 __all__ = [
     "bloom_bit_positions",
     "bloom_build",
@@ -122,24 +124,13 @@ def merge_bitor_state(
     is harmless even WITHOUT the batch-id high-water-mark — the sink's
     exactly-once ledger is still used, but the state is safe by algebra
     too. Drop-in ``merge_fn`` for ``foreach_batch_incremental_agg``."""
-    s = state.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"_s_{c}") for c in counters],
-    )
-    d = delta.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"_d_{c}") for c in counters],
-    )
-    j = s.join(d, keys, "full_outer")
-    return j.select(
-        *[F.col(k) for k in keys],
-        *[
-            (
-                F.coalesce(F.col(f"_s_{c}"), F.lit(0).cast("long"))
-                .bitwiseOR(F.coalesce(F.col(f"_d_{c}"), F.lit(0).cast("long")))
-            ).alias(c)
-            for c in counters
-        ],
+    zero = F.lit(0).cast("long")
+    return merge_monoid_state(
+        state,
+        delta,
+        keys,
+        counters,
+        lambda s, d: F.coalesce(s, zero).bitwiseOR(F.coalesce(d, zero)),
     )
 
 

@@ -33,6 +33,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import merge_monoid_state
+
 __all__ = [
     "hll_build",
     "hll_merge",
@@ -91,27 +93,10 @@ def merge_max_state(
     state: DataFrame, delta: DataFrame, keys: list[str], counters: list[str]
 ) -> DataFrame:
     """MAX-monoid twin of ``merge_agg_state``: full-outer join on the
-    keys, missing sides contribute the identity (take the present side).
-    Drop-in ``merge_fn`` for ``foreach_batch_incremental_agg``."""
-    s = state.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"_s_{c}") for c in counters],
-    )
-    d = delta.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"_d_{c}") for c in counters],
-    )
-    j = s.join(d, keys, "full_outer")
-    return j.select(
-        *[F.col(k) for k in keys],
-        *[
-            F.greatest(
-                F.coalesce(F.col(f"_s_{c}"), F.col(f"_d_{c}")),
-                F.coalesce(F.col(f"_d_{c}"), F.col(f"_s_{c}")),
-            ).alias(c)
-            for c in counters
-        ],
-    )
+    keys, missing sides contribute the identity (``greatest`` skips the
+    absent side's null). Drop-in ``merge_fn`` for
+    ``foreach_batch_incremental_agg``."""
+    return merge_monoid_state(state, delta, keys, counters, F.greatest)
 
 
 def hll_merge(

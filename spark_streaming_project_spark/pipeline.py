@@ -4,16 +4,18 @@
 Two execution modes over one parsed product stream:
 
 - ``per_query`` (reference parity): six independent streaming queries — five
-  complete-mode aggregations + the per-batch top-k append pipeline — each
+  complete-mode aggregations + the per-batch top-k pipeline — each
   with its own checkpoint and sink. This re-reads the source per query,
   exactly like the reference's six branches (SURVEY.md §4 notes the 6x
   re-consumption).
 - ``multiplex`` (efficiency mode): ONE streaming query whose foreachBatch
-  persists the parsed micro-batch and computes every aggregate from it —
-  one source read per batch. Complete-mode semantics are kept by merging
-  each batch's partial counts into a parquet state table (counts are
-  additive; the merge is a distributed groupBy-sum, no driver state), then
-  publishing an atomic snapshot per table.
+  persists the parsed micro-batch and hands it to one sink per table — one
+  source read per batch. Each complete-mode table is an incremental
+  aggregate (``foreach_batch_incremental_agg``: the batch's partial counts
+  merged into a parquet state table), and the top-k is the same per-batch
+  sink the per-query mode uses. Every table is exactly-once under replay:
+  each state sink records its own high-water batch id and publishes by one
+  symlink swap, and the top-k sink overwrites its batch's partition.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .operators.aggregates import (
     brand_counts,
@@ -31,8 +32,12 @@ from .operators.aggregates import (
     nutriscore_counts,
     packaging_distribution,
 )
-from .operators.topk import additive_counts, top_k
+from .operators.topk import additive_counts
 from .streaming.runner import StreamRunner
+from .streaming.sinks import (
+    foreach_batch_incremental_agg,
+    foreach_batch_per_batch_topk,
+)
 
 #: The five complete-mode branches (name -> transform), Consumer.scala:63-68.
 BRANCHES: dict[str, Callable[[DataFrame], DataFrame]] = {
@@ -43,7 +48,7 @@ BRANCHES: dict[str, Callable[[DataFrame], DataFrame]] = {
     "nova_group_classification": nova_group_classification,
 }
 
-#: count column per branch output (the additive state key for multiplexing).
+#: count column per branch output (the additive counter when multiplexing).
 _COUNT_COL = {
     "nutriscore_counts": "product_count",
     "category_counts": "category_count",
@@ -51,6 +56,18 @@ _COUNT_COL = {
     "packaging_distribution": "packaging_count",
     "nova_group_classification": "product_count",
 }
+
+
+def _topk_sink(out_root: str) -> Callable[[DataFrame, int], None]:
+    """The per-batch top-10 additive products sink both modes write with
+    (total order: count desc, then product name)."""
+    return foreach_batch_per_batch_topk(
+        additive_counts,
+        os.path.join(out_root, "top_additive_products"),
+        "additive_count",
+        k=10,
+        tiebreak_asc=("product_name",),
+    )
 
 
 def run_per_query(
@@ -62,12 +79,10 @@ def run_per_query(
     state_store_provider: str | None = None,
 ) -> StreamRunner:
     """Reference-parity mode: six concurrent queries, per-query checkpoints,
-    memory sinks named after their output tables + parquet top-k appends.
+    memory sinks named after their output tables + the parquet top-k sink.
 
     ``state_store_provider="rocksdb"`` runs every branch's keyed state on
     the out-of-heap provider (the 100 TB path; see StreamRunner)."""
-    from .streaming.sinks import foreach_batch_per_batch_topk
-
     runner = StreamRunner(
         spark, checkpoint_root, state_store_provider=state_store_provider
     )
@@ -77,45 +92,10 @@ def run_per_query(
         "top_additive_products",
         products,
         output_mode="append",
-        foreach_batch=foreach_batch_per_batch_topk(
-            additive_counts,
-            os.path.join(out_root, "top_additive_products"),
-            "additive_count",
-            k=10,
-            # total order: must match run_multiplex's top_k tiebreak, or
-            # the two modes disagree on count ties at the k boundary
-            tiebreak_asc=("product_name",),
-        ),
+        foreach_batch=_topk_sink(out_root),
     )
     runner.start_all(available_now=available_now)
     return runner
-
-
-def _merge_counts(
-    spark: SparkSession, batch_agg: DataFrame, table_dir: str, count_col: str
-) -> None:
-    """Additive complete-mode state merge: previous snapshot (+) batch counts
-    -> new snapshot, published by atomic directory rename."""
-    state_dir = os.path.join(table_dir, "state")
-    staging = os.path.join(table_dir, "_staging")
-    key_cols = [c for c in batch_agg.columns if c != count_col]
-    merged = batch_agg
-    if os.path.exists(state_dir):
-        prev = spark.read.parquet(state_dir)
-        merged = (
-            prev.unionByName(batch_agg)
-            .groupBy(*key_cols)
-            .agg(F.sum(count_col).alias(count_col))
-        )
-    merged.write.mode("overwrite").parquet(staging)
-    old = os.path.join(table_dir, "_old")
-    if os.path.exists(state_dir):
-        os.rename(state_dir, old)
-    os.rename(staging, state_dir)
-    if os.path.exists(old):
-        import shutil
-
-        shutil.rmtree(old)
 
 
 def run_multiplex(
@@ -127,29 +107,23 @@ def run_multiplex(
     state_store_provider: str | None = None,
 ) -> StreamRunner:
     """Efficiency mode: one query, one source read per micro-batch; the
-    foreachBatch closure persists the batch and fans out to all branches."""
+    foreachBatch closure persists the batch and fans out to every table's
+    sink."""
+    sinks = [
+        foreach_batch_incremental_agg(
+            os.path.join(out_root, name, "state"),
+            branch,
+            [c for c in branch(products).columns if c != _COUNT_COL[name]],
+            [_COUNT_COL[name]],
+        )
+        for name, branch in BRANCHES.items()
+    ] + [_topk_sink(out_root)]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            for name, branch in BRANCHES.items():
-                _merge_counts(
-                    spark,
-                    branch(batch_df),
-                    os.path.join(out_root, name),
-                    _COUNT_COL[name],
-                )
-            topk = (
-                top_k(
-                    additive_counts(batch_df),
-                    [F.desc("additive_count"), F.asc("product_name")],
-                    10,
-                )
-                .withColumn("batch_id", F.lit(batch_id))
-            )
-            topk.write.mode("append").parquet(
-                os.path.join(out_root, "top_additive_products")
-            )
+            for sink in sinks:
+                sink(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 

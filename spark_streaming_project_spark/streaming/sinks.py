@@ -49,11 +49,14 @@ def foreach_batch_per_batch_topk(
     tiebreak_asc: Sequence[str] = (),
 ) -> Callable[[DataFrame, int], None]:
     """X5 semantics (Consumer.scala:147-165): re-aggregate *within* each
-    micro-batch, keep the batch-local top-k, stamp ``batch_id``, append.
+    micro-batch and keep the batch-local top-k.
 
-    The output parquet dir accumulates one top-k per batch — exactly the
-    reference's ``top_additive_products`` table shape (batch_id column,
-    init.sql:39-44).
+    Each batch overwrites its own ``batch_id=<N>`` partition under
+    ``out_dir`` instead of appending, so a replayed micro-batch (foreachBatch
+    is at-least-once) rewrites its partition rather than adding rows.
+    Reading ``out_dir`` gives the reference's ``top_additive_products``
+    table shape (batch_id column last, init.sql:39-44) through partition
+    discovery.
 
     ``tiebreak_asc`` extends the ordering to a TOTAL order: without it, a
     tie on ``k_order_desc`` at the k boundary picks an arbitrary row per
@@ -63,13 +66,9 @@ def foreach_batch_per_batch_topk(
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         order = [F.desc(k_order_desc)] + [F.asc(c) for c in tiebreak_asc]
-        topk = (
-            aggregate(batch_df)
-            .orderBy(*order)
-            .limit(k)
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        topk.write.mode("append").parquet(out_dir)
+        aggregate(batch_df).orderBy(*order).limit(k).write.mode(
+            "overwrite"
+        ).parquet(f"{out_dir}/batch_id={batch_id}")
 
     return write
 

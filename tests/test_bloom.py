@@ -79,6 +79,15 @@ def test_merged_halves_equal_one_shot_build_and_merge_is_idempotent(spark):
     # idempotent: re-merging an already-absorbed delta changes nothing
     again = merge_bitor_state(merged, b1, ["word_idx"], ["word"])
     assert _words(again) == _words(full)
+    # a NULL key is an ordinary group: present on both sides, it merges
+    # into ONE row, however often the merge repeats
+    nk = spark.createDataFrame([(None, 1)], "word_idx long, word long")
+    merged = merge_bitor_state(
+        b1.unionByName(nk), b2.unionByName(nk), ["word_idx"], ["word"]
+    )
+    again = merge_bitor_state(merged, nk, ["word_idx"], ["word"])
+    assert _words(again) == {**_words(full), None: 1}
+    assert again.count() == len(_words(full)) + 1
 
 
 def test_streaming_incremental_build_matches_batch(spark, tmp_path):

@@ -497,6 +497,13 @@ def test_hll_sketch_accuracy_union_and_streaming_merge(spark):
     whole = {(r["g"], r["bucket"]): r["max_rho"] for r in reg.collect()}
     assert {(r["g"], r["bucket"]): r["max_rho"] for r in merged.collect()} == whole
 
+    # a NULL group is an ordinary group: both sides' registers for it merge
+    # into ONE row holding the max
+    nk = spark.createDataFrame([(None, 5, 2)], "g long, bucket long, max_rho int")
+    nk3 = spark.createDataFrame([(None, 5, 3)], "g long, bucket long, max_rho int")
+    got = hll_merge(hll_merge(nk, nk3, ["g"]), nk, ["g"]).collect()
+    assert [tuple(r) for r in got] == [(None, 5, 3)]
+
 
 def test_fuzzy_match_pairs_vs_bruteforce(spark):
     """The count-filtered fuzzy matcher must return EXACTLY the pairs an

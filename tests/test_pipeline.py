@@ -5,6 +5,8 @@ content across micro-batches."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,11 +71,46 @@ def test_pipeline_modes_agree(spark, tmp_path, envelope_src):
         assert got_pq == want, f"per-query {name} diverged from batch"
         assert got_mx == want, f"multiplex {name} diverged from batch"
 
-    # both modes accumulated per-batch top-k appends
+    # both modes wrote one top-k per micro-batch
     pq_topk = spark.read.parquet(str(tmp_path / "pq_out" / "top_additive_products"))
     mx_topk = spark.read.parquet(str(tmp_path / "mx_out" / "top_additive_products"))
     assert pq_topk.select("batch_id").distinct().count() > 1
     assert mx_topk.select("batch_id").distinct().count() > 1
+
+
+def test_multiplex_replay_is_exactly_once(spark, tmp_path, envelope_src):
+    """A crash after the sinks wrote batch N but before Spark committed it
+    (the last ``commits/N`` is missing) makes the restarted query replay
+    batch N. Every complete-mode table must still equal its branch applied
+    in batch, and the replayed top-k must not duplicate rows."""
+    src, products = envelope_src
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def drain():
+        stream = parse_envelopes(
+            stream_parquet_dir(spark, src, VALUE_SCHEMA, max_files_per_trigger=1)
+        )
+        runner = run_multiplex(spark, stream, out, ckpt)
+        runner.await_all(timeout_sec=240)
+        runner.stop_all()
+
+    drain()
+    commits = os.path.join(ckpt, "openfood_multiplex", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last > 0  # several micro-batches, so the replay is of one of them
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    drain()
+    assert os.path.exists(os.path.join(commits, str(last)))  # batch re-ran
+
+    batch_df = spark.createDataFrame(products, products_df(spark, 1).schema)
+    for name, branch in BRANCHES.items():
+        want = sorted(map(tuple, branch(batch_df).collect()))
+        got = sorted(map(tuple, read_snapshot(spark, out, name).collect()))
+        assert got == want, f"{name} counted the replayed batch twice"
+    topk = spark.read.parquet(os.path.join(out, "top_additive_products"))
+    assert topk.count() == topk.select("batch_id", "product_name").distinct().count()
+    assert topk.select("batch_id").distinct().count() == last + 1
 
 
 @pytest.mark.slow  # r14: driver-window gate (see conftest)
@@ -128,7 +165,7 @@ def test_full_topology_both_modes_rocksdb(spark, tmp_path, envelope_src):
         assert got_pq == want, f"per-query {name} diverged from batch (rocksdb)"
         assert got_mx == want, f"multiplex {name} diverged from batch (rocksdb)"
 
-    # per-batch top-k append logs: identical micro-batch slicing -> the two
+    # per-batch top-k tables: identical micro-batch slicing -> the two
     # modes must emit the same (batch_id, product, count) rows
     pq_topk = sorted(
         map(

@@ -106,23 +106,18 @@ def test_multi_query_concurrent(spark, tmp_path):
 
 
 def test_per_batch_append_topk(spark, tmp_path):
-    """X5: foreachBatch re-aggregates within each micro-batch, appends a
-    batch-stamped top-k — one result set per batch, each internally correct."""
+    """X5: foreachBatch re-aggregates within each micro-batch and writes a
+    batch-stamped top-k — one result set per batch, each internally correct,
+    and a replayed batch rewrites its result set instead of adding to it."""
     src, all_products = _write_envelope_files(spark, tmp_path, n_files=3)
     out = str(tmp_path / "topk_out")
     stream = parse_envelopes(
         stream_parquet_dir(spark, src, VALUE_SCHEMA, max_files_per_trigger=1)
     )
 
+    sink = foreach_batch_per_batch_topk(additive_counts, out, "additive_count", k=3)
     runner = StreamRunner(spark, str(tmp_path / "ckpt"))
-    runner.add(
-        "topk_stream",
-        stream,
-        output_mode="append",
-        foreach_batch=foreach_batch_per_batch_topk(
-            additive_counts, out, "additive_count", k=3
-        ),
-    )
+    runner.add("topk_stream", stream, output_mode="append", foreach_batch=sink)
     runner.start_all(available_now=True)
     runner.await_all(timeout_sec=180)
 
@@ -151,6 +146,11 @@ def test_per_batch_append_topk(spark, tmp_path):
         )[:3]
         got_counts = sorted((r["additive_count"] for r in rows), reverse=True)
         assert got_counts == exp_counts, f"batch {batch_id}"
+
+    # a replayed micro-batch (foreachBatch is at-least-once) rewrites its own
+    # batch's top-k instead of appending a second copy
+    sink(spark.createDataFrame(file_products, batch_schema), batch_id)
+    assert spark.read.parquet(out).count() == len(result)
 
 
 def test_watermarked_tumbling_window(spark, tmp_path):

@@ -416,8 +416,9 @@ def test_incremental_agg_replay_and_atomic_publish(spark, tmp_path):
 
     state = str(tmp_path / "replay_state")
     sink = foreach_batch_incremental_agg(state, agg, ["k"], ["n"])
-    b0 = spark.createDataFrame([("a",), ("a",), ("b",)], "k string")
-    b1 = spark.createDataFrame([("a",), ("c",)], "k string")
+    # a NULL key is an ordinary group: its partials must sum into one row
+    b0 = spark.createDataFrame([("a",), ("a",), ("b",), (None,)], "k string")
+    b1 = spark.createDataFrame([("a",), ("c",), (None,)], "k string")
 
     sink(b0, 0)
     sink(b0, 0)  # replayed epoch: must be a no-op, not a re-merge
@@ -425,8 +426,9 @@ def test_incremental_agg_replay_and_atomic_publish(spark, tmp_path):
     sink(b1, 1)  # replayed again
     sink(b1, 0)  # late replay of an OLDER epoch: also a no-op
 
-    got = {r["k"]: r["n"] for r in spark.read.parquet(state).collect()}
-    assert got == {"a": 3, "b": 1, "c": 1}
+    rows = spark.read.parquet(state).collect()
+    got = {r["k"]: r["n"] for r in rows}
+    assert got == {"a": 3, "b": 1, "c": 1, None: 2} and len(rows) == len(got)
     # atomic-publish layout: path is a symlink to the current version,
     # which records its own high-water batch_id in an underscore sidecar
     assert os.path.islink(state)
