@@ -25,65 +25,29 @@ from ..functions.cleaning import (
 )
 
 
-def _count_by(df: DataFrame, key: Column, key_name: str, count_name: str) -> DataFrame:
-    return (
-        df.select(key.alias(key_name))
-        .filter(F.col(key_name).isNotNull())
-        .groupBy(key_name)
-        .agg(F.count("*").alias(count_name))
+def _nutriscore_keys(df: DataFrame) -> DataFrame:
+    return df.filter(F.col("nutriscore_grade").isNotNull()).select(
+        normalize_grade("nutriscore_grade").alias("nutriscore")
     )
 
 
-def nutriscore_counts(df: DataFrame) -> DataFrame:
-    """A1 (Consumer.scala:187-199): grade-normalized product counts.
-
-    NULL grades are dropped *before* normalization (the reference filters
-    ``isNotNull`` on the raw column), then a..e map to uppercase and anything
-    else to UNKNOWN.
-    """
+def _category_keys(df: DataFrame) -> DataFrame:
     return (
-        df.filter(F.col("nutriscore_grade").isNotNull())
-        .select(normalize_grade("nutriscore_grade").alias("nutriscore"))
-        .groupBy("nutriscore")
-        .agg(F.count("*").alias("product_count"))
-    )
-
-
-def category_counts(df: DataFrame) -> DataFrame:
-    """A2 (Consumer.scala:201-215): main-category counts.
-
-    main_category = first categories tag, sentinel-blacklisted *before*
-    prefix-stripping (the reference blacklists the raw first tag), then
-    ``^[a-z]{2,3}:`` stripped.
-    """
-    raw = first_tag("categories_tags")
-    return (
-        df.select(raw.alias("raw_tag"))
+        df.select(first_tag("categories_tags").alias("raw_tag"))
         .filter(is_valid_tag(F.col("raw_tag")))
         .select(clean_tag(F.col("raw_tag")).alias("main_category"))
-        .groupBy("main_category")
-        .agg(F.count("*").alias("category_count"))
     )
 
 
-def brand_counts(df: DataFrame) -> DataFrame:
-    """A3 (Consumer.scala:239-250): first-brand counts, prefix-stripped."""
-    return _count_by(
-        df.filter(first_tag("brands_tags").isNotNull()),
-        clean_tag(first_tag("brands_tags")),
-        "brand",
-        "product_count",
-    )
+def _first_tag_keys(tags: str, key_name: str) -> Callable[[DataFrame], DataFrame]:
+    def project(df: DataFrame) -> DataFrame:
+        return (
+            df.filter(first_tag(tags).isNotNull())
+            .select(clean_tag(first_tag(tags)).alias(key_name))
+            .filter(F.col(key_name).isNotNull())
+        )
 
-
-def packaging_distribution(df: DataFrame) -> DataFrame:
-    """A4 (Consumer.scala:252-262): first-packaging-tag counts, prefix-stripped."""
-    return _count_by(
-        df.filter(first_tag("packaging_tags").isNotNull()),
-        clean_tag(first_tag("packaging_tags")),
-        "packaging",
-        "packaging_count",
-    )
+    return project
 
 
 NOVA_LABELS = {
@@ -94,12 +58,7 @@ NOVA_LABELS = {
 }
 
 
-def nova_group_classification(df: DataFrame) -> DataFrame:
-    """A5 (Consumer.scala:264-280): NOVA group extraction + labeling.
-
-    First nova tag -> regexp_extract first digit -> int; rows whose tag has no
-    digit are dropped; two-column group key (group, label).
-    """
+def _nova_keys(df: DataFrame) -> DataFrame:
     tag = first_tag("nova_groups_tags")
     digit = F.regexp_extract(tag, r"(\d)", 1)
     label = F.lit(None).cast("string")
@@ -111,9 +70,68 @@ def nova_group_classification(df: DataFrame) -> DataFrame:
         .filter(F.col("nova_digit") != "")
         .select(F.col("nova_digit").cast("int").alias("nova_group"))
         .withColumn("nova_label", label)
-        .groupBy("nova_group", "nova_label")
-        .agg(F.count("*").alias("product_count"))
     )
+
+
+#: table -> (key projection, count column) of the five reference count
+#: tables. Each table is its projection grouped by every projected column
+#: and counted; the multiplex pipeline counts all five projections in one
+#: tagged aggregate.
+COUNT_KEYS: dict[str, tuple[Callable[[DataFrame], DataFrame], str]] = {
+    "nutriscore_counts": (_nutriscore_keys, "product_count"),
+    "category_counts": (_category_keys, "category_count"),
+    "brand_counts": (_first_tag_keys("brands_tags", "brand"), "product_count"),
+    "packaging_distribution": (
+        _first_tag_keys("packaging_tags", "packaging"),
+        "packaging_count",
+    ),
+    "nova_group_classification": (_nova_keys, "product_count"),
+}
+
+
+def _count_table(table: str, df: DataFrame) -> DataFrame:
+    project, count_col = COUNT_KEYS[table]
+    keys = project(df)
+    return keys.groupBy(*keys.columns).agg(F.count("*").alias(count_col))
+
+
+def nutriscore_counts(df: DataFrame) -> DataFrame:
+    """A1 (Consumer.scala:187-199): grade-normalized product counts.
+
+    NULL grades are dropped *before* normalization (the reference filters
+    ``isNotNull`` on the raw column), then a..e map to uppercase and anything
+    else to UNKNOWN.
+    """
+    return _count_table("nutriscore_counts", df)
+
+
+def category_counts(df: DataFrame) -> DataFrame:
+    """A2 (Consumer.scala:201-215): main-category counts.
+
+    main_category = first categories tag, sentinel-blacklisted *before*
+    prefix-stripping (the reference blacklists the raw first tag), then
+    ``^[a-z]{2,3}:`` stripped.
+    """
+    return _count_table("category_counts", df)
+
+
+def brand_counts(df: DataFrame) -> DataFrame:
+    """A3 (Consumer.scala:239-250): first-brand counts, prefix-stripped."""
+    return _count_table("brand_counts", df)
+
+
+def packaging_distribution(df: DataFrame) -> DataFrame:
+    """A4 (Consumer.scala:252-262): first-packaging-tag counts, prefix-stripped."""
+    return _count_table("packaging_distribution", df)
+
+
+def nova_group_classification(df: DataFrame) -> DataFrame:
+    """A5 (Consumer.scala:264-280): NOVA group extraction + labeling.
+
+    First nova tag -> regexp_extract first digit -> int; rows whose tag has no
+    digit are dropped; two-column group key (group, label).
+    """
+    return _count_table("nova_group_classification", df)
 
 
 def weighted_average(

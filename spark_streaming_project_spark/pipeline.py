@@ -9,23 +9,33 @@ Two execution modes over one parsed product stream:
   exactly like the reference's six branches (SURVEY.md §4 notes the 6x
   re-consumption).
 - ``multiplex`` (efficiency mode): ONE streaming query whose foreachBatch
-  persists the parsed micro-batch and hands it to one sink per table — one
-  source read per batch. Each complete-mode table is an incremental
-  aggregate (``foreach_batch_incremental_agg``: the batch's partial counts
-  merged into a parquet state table), and the top-k is the same per-batch
-  sink the per-query mode uses. Every table is exactly-once under replay:
-  each state sink records its own high-water batch id and publishes by one
-  symlink swap, and the top-k sink overwrites its batch's partition.
+  persists the parsed micro-batch and hands it to two sinks — one source
+  read per batch. The five complete-mode tables live in one tagged count
+  table (``out/counts/state``): each batch unions the five branches' key
+  projections, each under a literal ``table`` column, counts them in one
+  ``groupBy(table, <all key columns>)`` and merges that delta into the
+  state with one ``foreach_batch_incremental_agg`` — one merge per batch,
+  not one per table. A table's key columns keep their own types, and the
+  other tables' key columns are null in its rows. ``read_snapshot`` splits
+  one table back out. The top-k is the same per-batch sink the per-query
+  mode uses. Both sinks are exactly-once under replay: the count sink
+  records its high-water batch id and publishes by one symlink swap, and
+  the top-k sink overwrites its batch's partition. State written by the
+  older one-table-per-directory layout (``out/<table>/state``) is not
+  migrated; a restart on such an output directory starts a new count table.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.aggregates import (
+    COUNT_KEYS,
     brand_counts,
     category_counts,
     nova_group_classification,
@@ -33,6 +43,7 @@ from .operators.aggregates import (
     packaging_distribution,
 )
 from .operators.topk import additive_counts
+from .schemas import PRODUCT
 from .streaming.runner import StreamRunner
 from .streaming.sinks import (
     foreach_batch_incremental_agg,
@@ -48,14 +59,34 @@ BRANCHES: dict[str, Callable[[DataFrame], DataFrame]] = {
     "nova_group_classification": nova_group_classification,
 }
 
-#: count column per branch output (the additive counter when multiplexing).
-_COUNT_COL = {
-    "nutriscore_counts": "product_count",
-    "category_counts": "category_count",
-    "brand_counts": "product_count",
-    "packaging_distribution": "packaging_count",
-    "nova_group_classification": "product_count",
-}
+#: the multiplex mode's tagged count table: its directory under out_root,
+#: the column naming each row's table, and the counter column.
+_COUNTS_DIR, _TABLE, _COUNT = "counts", "table", "count"
+
+
+def _tagged_counts(df: DataFrame) -> DataFrame:
+    """Every complete-mode table in one aggregate: the branches' key
+    projections, each tagged with its table name, unioned by column name
+    (a table's absent key columns are null) and counted by (table, every
+    key column)."""
+    keys = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            project(df).withColumn(_TABLE, F.lit(name))
+            for name, (project, _) in COUNT_KEYS.items()
+        ],
+    )
+    return keys.groupBy(_TABLE, *[c for c in keys.columns if c != _TABLE]).count()
+
+
+#: State partitions of each per-query stateful aggregation. A streaming
+#: aggregation keeps one state-store instance per shuffle partition (AQE
+#: does not coalesce them), and each table holds few keys: at most 20 in
+#: the fixtures, and the reference pins 5 for the same reason
+#: (Consumer.scala:41-45). On 4 vCPUs, one partition instead of four cut
+#: perfbench's freshness p50 from 4.3 to 3.0 s (medians of 10 paired
+#: stream runs).
+_STATE_PARTITIONS = 1
 
 
 def _topk_sink(out_root: str) -> Callable[[DataFrame, int], None]:
@@ -84,7 +115,10 @@ def run_per_query(
     ``state_store_provider="rocksdb"`` runs every branch's keyed state on
     the out-of-heap provider (the 100 TB path; see StreamRunner)."""
     runner = StreamRunner(
-        spark, checkpoint_root, state_store_provider=state_store_provider
+        spark,
+        checkpoint_root,
+        state_store_provider=state_store_provider,
+        state_partitions=_STATE_PARTITIONS,
     )
     for name, branch in BRANCHES.items():
         runner.add(name, branch(products), output_mode="complete")
@@ -107,17 +141,18 @@ def run_multiplex(
     state_store_provider: str | None = None,
 ) -> StreamRunner:
     """Efficiency mode: one query, one source read per micro-batch; the
-    foreachBatch closure persists the batch and fans out to every table's
-    sink."""
+    foreachBatch closure persists the batch and hands it to the tagged
+    count sink (one merge for all five complete-mode tables) and the
+    top-k sink."""
     sinks = [
         foreach_batch_incremental_agg(
-            os.path.join(out_root, name, "state"),
-            branch,
-            [c for c in branch(products).columns if c != _COUNT_COL[name]],
-            [_COUNT_COL[name]],
-        )
-        for name, branch in BRANCHES.items()
-    ] + [_topk_sink(out_root)]
+            os.path.join(out_root, _COUNTS_DIR, "state"),
+            _tagged_counts,
+            [c for c in _tagged_counts(products).columns if c != _COUNT],
+            [_COUNT],
+        ),
+        _topk_sink(out_root),
+    ]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
@@ -136,5 +171,17 @@ def run_multiplex(
 
 
 def read_snapshot(spark: SparkSession, out_root: str, table: str) -> DataFrame:
-    """Read a complete-mode table's current snapshot (multiplex mode)."""
-    return spark.read.parquet(os.path.join(out_root, table, "state"))
+    """Read a complete-mode table's current snapshot (multiplex mode): the
+    tagged count table's rows for ``table``, with that table's columns in
+    its branch's order and the counter under the branch's count name —
+    the same schema and values as ``BRANCHES[table]`` in batch. Both the
+    column list and the read schema come from plans over an empty
+    ``PRODUCT`` frame, so no Spark job runs before the caller's action."""
+    empty = spark.createDataFrame([], PRODUCT)
+    *keys, count_col = BRANCHES[table](empty).columns
+    return (
+        spark.read.schema(_tagged_counts(empty).schema)
+        .parquet(os.path.join(out_root, _COUNTS_DIR, "state"))
+        .filter(F.col(_TABLE) == table)
+        .select(*keys, F.col(_COUNT).alias(count_col))
+    )

@@ -81,6 +81,10 @@ class StreamRunner:
     # Spark's default provider. Session-wide: applies to every query the
     # session starts while set.
     state_store_provider: str | None = None
+    # Shuffle partitions, and so state-store instances, of every query
+    # started while set. Each query latches the count in its checkpoint at
+    # first start, so a restart keeps it. None keeps the session's value.
+    state_partitions: int | None = None
 
     _PROVIDERS = {
         "rocksdb": (
@@ -126,24 +130,26 @@ class StreamRunner:
         return out
 
     def start_all(self, available_now: bool = False) -> dict[str, StreamingQuery]:
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prior = None
+        scoped = {}
         if self.state_store_provider is not None:
-            provider = self._PROVIDERS.get(
-                self.state_store_provider, self.state_store_provider
+            scoped["spark.sql.streaming.stateStore.providerClass"] = (
+                self._PROVIDERS.get(self.state_store_provider, self.state_store_provider)
             )
-            prior = self.spark.conf.get(conf_key, None)
-            self.spark.conf.set(conf_key, provider)
+        if self.state_partitions is not None:
+            scoped["spark.sql.shuffle.partitions"] = str(self.state_partitions)
+        prior = {k: self.spark.conf.get(k, None) for k in scoped}
+        for k, v in scoped.items():
+            self.spark.conf.set(k, v)
         try:
             self._start_specs(available_now)
         finally:
-            # provider is latched per query at start(); restore the session
-            # conf so a shared session's later queries keep their default
-            if self.state_store_provider is not None:
-                if prior is None:
-                    self.spark.conf.unset(conf_key)
+            # both are latched per query at start(); restore the session
+            # conf so a shared session's later queries keep their defaults
+            for k, v in prior.items():
+                if v is None:
+                    self.spark.conf.unset(k)
                 else:
-                    self.spark.conf.set(conf_key, prior)
+                    self.spark.conf.set(k, v)
         return self.queries
 
     def _start_specs(self, available_now: bool) -> None:

@@ -260,12 +260,18 @@ def foreach_batch_incremental_agg(
         spark = batch_df.sparkSession
         if _already_applied(path, batch_id):
             return  # replayed micro-batch: already merged
+        delta = agg_fn(batch_df)
         if _state_exists(path):
-            state = spark.read.parquet(path)
-            merged = combine(state, agg_fn(batch_df), keys, counters)
-        else:
-            merged = agg_fn(batch_df)
-        _publish_versioned(merged, path, batch_id)
+            # Every version is written in the delta's schema (the merge is
+            # cast back to it: a decimal sum would otherwise widen by one
+            # digit per merge), so the read needs no schema-inference job.
+            schema = delta.schema
+            state = spark.read.schema(schema).parquet(path)
+            merged = combine(state, delta, keys, counters)
+            delta = merged.select(
+                *[F.col(c).cast(schema[c].dataType) for c in merged.columns]
+            )
+        _publish_versioned(delta, path, batch_id)
 
     return write
 

@@ -14,16 +14,18 @@ from pyspark.sql import types as T
 from spark_streaming_project_spark.operators.parse import parse_envelopes
 from spark_streaming_project_spark.pipeline import (
     BRANCHES,
+    _tagged_counts,
     read_snapshot,
     run_multiplex,
     run_per_query,
 )
+from spark_streaming_project_spark.schemas import PRODUCT
 from spark_streaming_project_spark.sources.fixtures import (
     make_envelopes,
     make_products,
     products_df,
 )
-from spark_streaming_project_spark.streaming import stream_parquet_dir
+from spark_streaming_project_spark.streaming import StreamRunner, stream_parquet_dir
 
 VALUE_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
 
@@ -111,6 +113,96 @@ def test_multiplex_replay_is_exactly_once(spark, tmp_path, envelope_src):
     topk = spark.read.parquet(os.path.join(out, "top_additive_products"))
     assert topk.count() == topk.select("batch_id", "product_name").distinct().count()
     assert topk.select("batch_id").distinct().count() == last + 1
+
+
+def test_tagged_counts_split_equals_each_branch(spark, tmp_path):
+    """The fused count table, written and split back out by
+    ``read_snapshot``, holds each branch's batch result with its schema.
+    The rows cover the keys that can collide in one table: a null brand
+    (array null and first element null), a NOVA digit outside 1..4 (its
+    label is NULL, a null key next to a set one), a tag without a digit,
+    and a brand and a packaging with the same string."""
+    def product(grade, category, brand, packaging, nova):
+        return (grade, category, None, None, packaging, brand, None, nova)
+
+    df = spark.createDataFrame(
+        [
+            product("a", ["en:snacks"], None, ["en:glass"], ["en:4"]),
+            product(None, ["en:snacks"], ["en:glass"], ["en:plastic"], ["en:5"]),
+            product("Z", None, [None], ["en:glass"], ["en:5"]),
+            product("b", ["fr:boissons"], ["en:glass"], None, ["en:none"]),
+            product("B", ["en:snacks"], ["xx:acme"], ["en:glass"], None),
+        ],
+        PRODUCT,
+    )
+    out = str(tmp_path / "out")
+    _tagged_counts(df).write.parquet(os.path.join(out, "counts", "state"))
+    for name, branch in BRANCHES.items():
+        want = branch(df)
+        got = read_snapshot(spark, out, name)
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ], name
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), name
+    nova = read_snapshot(spark, out, "nova_group_classification").collect()
+    assert (5, None, 2) in map(tuple, nova)
+
+
+def test_multiplex_drain_job_budget(spark, tmp_path, envelope_src):
+    """A two-batch ``run_multiplex`` drain runs one count merge and one
+    top-k write per batch. Counted in the query's runId job group: 20 jobs
+    at the time of writing; one incremental-agg sink per table, each
+    inferring its state's schema, ran 41."""
+    src, _ = envelope_src
+    stream = parse_envelopes(
+        stream_parquet_dir(spark, src, VALUE_SCHEMA, max_files_per_trigger=2)
+    )
+    runner = run_multiplex(
+        spark, stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    runner.await_all(timeout_sec=240)
+    (query,) = runner.queries.values()
+    assert sum(p["numInputRows"] > 0 for p in query.recentProgress) == 2
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId))
+    assert len(jobs) <= 20, len(jobs)
+
+
+def test_state_partitions_scope_start_and_latch(spark, tmp_path):
+    """``StreamRunner(state_partitions=1)`` starts a stateful query on one
+    state partition, restores the session's shuffle-partition conf after
+    ``start_all``, and a restart with the session default keeps the count
+    the checkpoint latched (and the state it holds)."""
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    assert session_value != "1"  # so the restart below would differ
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    schema = T.StructType([T.StructField("k", T.StringType())])
+
+    def run(state_partitions):
+        runner = StreamRunner(spark, ckpt, state_partitions=state_partitions)
+        counts = stream_parquet_dir(spark, src, schema).groupBy("k").count()
+        runner.add("sp_counts", counts, output_mode="complete")
+        runner.start_all(available_now=True)
+        assert spark.conf.get(key) == session_value
+        runner.await_all(timeout_sec=120)
+        (op,) = [
+            p["stateOperators"][0]
+            for p in runner.queries["sp_counts"].recentProgress
+            if p["numInputRows"] > 0
+        ]
+        return op["numShufflePartitions"]
+
+    spark.createDataFrame([("a",), ("b",), ("a",)], schema).write.parquet(src)
+    assert run(1) == 1
+    spark.createDataFrame([("a",), ("c",)], schema).write.mode("append").parquet(src)
+    assert run(None) == 1
+    assert sorted(map(tuple, spark.table("sp_counts").collect())) == [
+        ("a", 3),
+        ("b", 1),
+        ("c", 1),
+    ]
 
 
 @pytest.mark.slow  # r14: driver-window gate (see conftest)

@@ -343,6 +343,9 @@ def test_incremental_agg_maintenance_matches_batch(spark, tmp_path):
         r["event_type"]: (r["n"], r["total"]) for r in agg(ev).collect()
     }
     assert got == want and got
+    # merges keep the delta's types: the decimal sum does not widen
+    total = spark.read.parquet(state).schema["total"].dataType
+    assert total == agg(ev).schema["total"].dataType
 
 
 def test_streaming_anomaly_over_incremental_state_matches_batch(spark, tmp_path):
