@@ -25,29 +25,27 @@ from ..functions.cleaning import (
 )
 
 
-def _nutriscore_keys(df: DataFrame) -> DataFrame:
-    return df.filter(F.col("nutriscore_grade").isNotNull()).select(
-        normalize_grade("nutriscore_grade").alias("nutriscore")
-    )
+#: A count table's spec: the condition a row must meet to be counted, and
+#: the table's key Columns by name (the count groups by all of them).
+CountSpec = tuple[Column, dict[str, Column]]
 
 
-def _category_keys(df: DataFrame) -> DataFrame:
-    return (
-        df.select(first_tag("categories_tags").alias("raw_tag"))
-        .filter(is_valid_tag(F.col("raw_tag")))
-        .select(clean_tag(F.col("raw_tag")).alias("main_category"))
-    )
+def _nutriscore_spec() -> CountSpec:
+    grade = F.col("nutriscore_grade")
+    return grade.isNotNull(), {"nutriscore": normalize_grade(grade)}
 
 
-def _first_tag_keys(tags: str, key_name: str) -> Callable[[DataFrame], DataFrame]:
-    def project(df: DataFrame) -> DataFrame:
-        return (
-            df.filter(first_tag(tags).isNotNull())
-            .select(clean_tag(first_tag(tags)).alias(key_name))
-            .filter(F.col(key_name).isNotNull())
-        )
+def _category_spec() -> CountSpec:
+    tag = first_tag("categories_tags")
+    return is_valid_tag(tag), {"main_category": clean_tag(tag)}
 
-    return project
+
+def _first_tag_spec(tags: str, key_name: str) -> Callable[[], CountSpec]:
+    def spec() -> CountSpec:
+        key = clean_tag(first_tag(tags))
+        return first_tag(tags).isNotNull() & key.isNotNull(), {key_name: key}
+
+    return spec
 
 
 NOVA_LABELS = {
@@ -58,41 +56,42 @@ NOVA_LABELS = {
 }
 
 
-def _nova_keys(df: DataFrame) -> DataFrame:
+def _nova_spec() -> CountSpec:
     tag = first_tag("nova_groups_tags")
     digit = F.regexp_extract(tag, r"(\d)", 1)
+    group = digit.cast("int")
     label = F.lit(None).cast("string")
     for grp, text in sorted(NOVA_LABELS.items()):
-        label = F.when(F.col("nova_group") == grp, F.lit(text)).otherwise(label)
-    return (
-        df.filter(tag.isNotNull() & (F.length(tag) > 0))
-        .select(digit.alias("nova_digit"))
-        .filter(F.col("nova_digit") != "")
-        .select(F.col("nova_digit").cast("int").alias("nova_group"))
-        .withColumn("nova_label", label)
-    )
+        label = F.when(group == grp, F.lit(text)).otherwise(label)
+    cond = tag.isNotNull() & (F.length(tag) > 0) & (digit != "")
+    return cond, {"nova_group": group, "nova_label": label}
 
 
-#: table -> (key projection, count column) of the five reference count
-#: tables. Each table is its projection grouped by every projected column
-#: and counted; the multiplex pipeline counts all five projections in one
-#: tagged aggregate.
-COUNT_KEYS: dict[str, tuple[Callable[[DataFrame], DataFrame], str]] = {
-    "nutriscore_counts": (_nutriscore_keys, "product_count"),
-    "category_counts": (_category_keys, "category_count"),
-    "brand_counts": (_first_tag_keys("brands_tags", "brand"), "product_count"),
+#: table -> (spec builder, count column) of the five reference count
+#: tables. Each table is ``filter(cond).select(keys)`` grouped by every key
+#: and counted; the multiplex pipeline counts all five specs in one pass.
+#: Builders, not Columns: a Column needs a running SparkContext.
+COUNT_KEYS: dict[str, tuple[Callable[[], CountSpec], str]] = {
+    "nutriscore_counts": (_nutriscore_spec, "product_count"),
+    "category_counts": (_category_spec, "category_count"),
+    "brand_counts": (_first_tag_spec("brands_tags", "brand"), "product_count"),
     "packaging_distribution": (
-        _first_tag_keys("packaging_tags", "packaging"),
+        _first_tag_spec("packaging_tags", "packaging"),
         "packaging_count",
     ),
-    "nova_group_classification": (_nova_keys, "product_count"),
+    "nova_group_classification": (_nova_spec, "product_count"),
 }
 
 
 def _count_table(table: str, df: DataFrame) -> DataFrame:
-    project, count_col = COUNT_KEYS[table]
-    keys = project(df)
-    return keys.groupBy(*keys.columns).agg(F.count("*").alias(count_col))
+    spec, count_col = COUNT_KEYS[table]
+    cond, keys = spec()
+    return (
+        df.filter(cond)
+        .select(*[c.alias(k) for k, c in keys.items()])
+        .groupBy(*keys)
+        .agg(F.count("*").alias(count_col))
+    )
 
 
 def nutriscore_counts(df: DataFrame) -> DataFrame:
@@ -151,41 +150,36 @@ def merge_monoid_state(
     delta: DataFrame,
     keys: list[str],
     counters: list[str],
-    combine: Callable[[Column, Column], Column],
+    combine: Callable[[Column], Column],
 ) -> DataFrame:
-    """One keyed monoid merge: null-safe full-outer join of ``state`` and
-    ``delta`` on ``keys``, then ``combine(state_col, delta_col)`` per
-    counter, with the absent side of an unmatched key as null. Keys are
-    matched with ``eqNullSafe`` (an equi-join never matches NULL to NULL,
-    so a null key would come back as one more row on every merge) and
-    come out as ``coalesce(state_key, delta_key)``."""
-    s = state.select(*[F.col(c).alias(f"_s_{c}") for c in keys + counters])
-    d = delta.select(*[F.col(c).alias(f"_d_{c}") for c in keys + counters])
-    on = [F.col(f"_s_{k}").eqNullSafe(F.col(f"_d_{k}")) for k in keys]
-    return s.join(d, on, "full_outer").select(
-        *[F.coalesce(F.col(f"_s_{k}"), F.col(f"_d_{k}")).alias(k) for k in keys],
-        *[combine(F.col(f"_s_{c}"), F.col(f"_d_{c}")).alias(c) for c in counters],
+    """One keyed monoid merge: ``state`` and ``delta`` unioned by column
+    name and grouped by ``keys``, each counter folded by the aggregate
+    ``combine`` (``F.sum``, ``F.max``, ``F.bit_or``) and cast back to its
+    input type (``sum`` widens its type: a decimal sum would grow in
+    precision on every merge). ``groupBy`` puts all null keys in one
+    group, so a null-keyed group merges into one row like any other."""
+    both = state.select(*keys, *counters).unionByName(
+        delta.select(*keys, *counters)
+    )
+    types = both.schema
+    return both.groupBy(*keys).agg(
+        *[combine(F.col(c)).cast(types[c].dataType).alias(c) for c in counters]
     )
 
 
 def merge_agg_state(state, delta, keys, counters):
     """Merge ADDITIVE aggregate frames (counts, sums — anything with a
-    commutative monoid): full-outer join on the grouping keys, missing
-    sides contribute the identity. Null keys are ordinary groups: two
-    partials of the same null-keyed group sum into one row. The primitive
-    behind incremental materialized-view maintenance: state' = state (+)
-    delta, so refreshing a 10^9-group dashboard table costs O(|delta| +
-    touched groups), never a fact-table rescan.
+    commutative monoid): union, then sum per key, with a null counter
+    contributing 0. Null keys are ordinary groups: two partials
+    of the same null-keyed group sum into one row. The primitive behind
+    incremental materialized-view maintenance: state' = state (+) delta,
+    so refreshing a 10^9-group dashboard table costs O(|state| + |delta|)
+    in one aggregate, never a fact-table rescan.
 
     Non-additive measures (min/max are semigroup-mergeable too and could
     be added; averages must travel as (sum, count) pairs; distinct counts
     need sketches) — callers decompose before merging.
     """
-    zero = F.lit(0)
     return merge_monoid_state(
-        state,
-        delta,
-        keys,
-        counters,
-        lambda s, d: F.coalesce(s, zero) + F.coalesce(d, zero),
+        state, delta, keys, counters, lambda c: F.coalesce(F.sum(c), F.lit(0))
     )

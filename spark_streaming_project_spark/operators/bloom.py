@@ -119,18 +119,17 @@ def bloom_build(
 def merge_bitor_state(
     state: DataFrame, delta: DataFrame, keys: list[str], counters: list[str]
 ) -> DataFrame:
-    """OR-monoid merge: full-outer join on the keys, absent side
-    contributes 0. Because OR is idempotent, re-merging a replayed delta
-    is harmless even WITHOUT the batch-id high-water-mark — the sink's
-    exactly-once ledger is still used, but the state is safe by algebra
-    too. Drop-in ``merge_fn`` for ``foreach_batch_incremental_agg``."""
-    zero = F.lit(0).cast("long")
+    """OR-monoid merge: union, then ``bit_or`` per key, with an absent
+    or null word contributing 0. Because OR is idempotent, re-merging a
+    replayed delta is harmless even WITHOUT the batch-id high-water-mark —
+    the sink's exactly-once ledger is still used, but the state is safe by
+    algebra too. Drop-in ``merge_fn`` for ``foreach_batch_incremental_agg``."""
     return merge_monoid_state(
         state,
         delta,
         keys,
         counters,
-        lambda s, d: F.coalesce(s, zero).bitwiseOR(F.coalesce(d, zero)),
+        lambda c: F.coalesce(F.bit_or(c), F.lit(0)),
     )
 
 

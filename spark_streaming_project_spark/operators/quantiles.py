@@ -12,8 +12,8 @@ so the sketch IS an additive (key, bin) -> count frame —
 
   - building from the whole corpus, building from parts and merging, and
     maintaining under foreachBatch all yield the IDENTICAL frame;
-  - merge = counter addition (``merge_agg_state`` verbatim, full-outer
-    join + coalesce-sum), commutative and associative with no order term;
+  - merge = counter addition (``merge_agg_state`` verbatim, union +
+    per-bin sum), commutative and associative with no order term;
   - quantile answers carry a RELATIVE-error guarantee <= alpha, from the
     log spacing of the bin boundaries.
 

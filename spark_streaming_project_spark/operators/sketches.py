@@ -92,11 +92,10 @@ def hll_build(
 def merge_max_state(
     state: DataFrame, delta: DataFrame, keys: list[str], counters: list[str]
 ) -> DataFrame:
-    """MAX-monoid twin of ``merge_agg_state``: full-outer join on the
-    keys, missing sides contribute the identity (``greatest`` skips the
-    absent side's null). Drop-in ``merge_fn`` for
-    ``foreach_batch_incremental_agg``."""
-    return merge_monoid_state(state, delta, keys, counters, F.greatest)
+    """MAX-monoid twin of ``merge_agg_state``: union, then ``max`` per
+    key, so a key on one side only keeps its value. Drop-in ``merge_fn``
+    for ``foreach_batch_incremental_agg``."""
+    return merge_monoid_state(state, delta, keys, counters, F.max)
 
 
 def hll_merge(

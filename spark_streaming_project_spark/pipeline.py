@@ -9,28 +9,31 @@ Two execution modes over one parsed product stream:
   exactly like the reference's six branches (SURVEY.md §4 notes the 6x
   re-consumption).
 - ``multiplex`` (efficiency mode): ONE streaming query whose foreachBatch
-  persists the parsed micro-batch and hands it to two sinks — one source
-  read per batch. The five complete-mode tables live in one tagged count
-  table (``out/counts/state``): each batch unions the five branches' key
-  projections, each under a literal ``table`` column, counts them in one
-  ``groupBy(table, <all key columns>)`` and merges that delta into the
-  state with one ``foreach_batch_incremental_agg`` — one merge per batch,
-  not one per table. A table's key columns keep their own types, and the
-  other tables' key columns are null in its rows. ``read_snapshot`` splits
-  one table back out. The top-k is the same per-batch sink the per-query
-  mode uses. Both sinks are exactly-once under replay: the count sink
-  records its high-water batch id and publishes by one symlink swap, and
-  the top-k sink overwrites its batch's partition. State written by the
-  older one-table-per-directory layout (``out/<table>/state``) is not
-  migrated; a restart on such an output directory starts a new count table.
+  persists the parsed micro-batch and runs its two sinks side by side, on
+  two threads — one source read per batch. The five complete-mode tables
+  live in one tagged count table (``out/counts/state``): one ``select``
+  turns each product into a row per table it counts in (a literal
+  ``table`` column plus every table's key columns, the other tables' keys
+  null), one ``groupBy(table, <all key columns>)`` counts them, and one
+  ``foreach_batch_incremental_agg`` merges that delta into the state —
+  one scan and one merge per batch, not one per table.
+  ``read_snapshot`` splits one table back out. The top-k is the same
+  per-batch sink the per-query mode uses. Both sinks are exactly-once
+  under replay: the count sink records its high-water batch id and
+  publishes by one symlink swap, and the top-k sink overwrites its
+  batch's partition. So when either sink fails, the batch is not
+  committed and its replay is safe. State written by the older
+  one-table-per-directory layout (``out/<table>/state``) is not migrated;
+  a restart on such an output directory starts a new count table.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from functools import reduce
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,19 +67,30 @@ BRANCHES: dict[str, Callable[[DataFrame], DataFrame]] = {
 _COUNTS_DIR, _TABLE, _COUNT = "counts", "table", "count"
 
 
+def _tagged_counter(df: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """Every complete-mode table in one aggregate over frames shaped like
+    ``df``: each row becomes one tagged row per table whose condition it
+    meets (its table name, that table's keys, the other tables' keys as
+    typed nulls), counted by (table, every key column). The Columns are
+    built here once; the returned function only plans."""
+    specs = {name: spec() for name, (spec, _) in COUNT_KEYS.items()}
+    keys = {k: c for _, table_keys in specs.values() for k, c in table_keys.items()}
+    schema = df.select(*[c.alias(k) for k, c in keys.items()]).schema
+    null = {f.name: F.lit(None).cast(f.dataType) for f in schema}
+    tagged = [
+        F.when(cond, F.struct(
+            F.lit(name).alias(_TABLE),
+            *[table_keys.get(k, null[k]).alias(k) for k in keys],
+        ))
+        for name, (cond, table_keys) in specs.items()
+    ]
+    rows = F.inline(F.filter(F.array(*tagged), lambda r: r.isNotNull()))
+    return lambda batch: batch.select(rows).groupBy(_TABLE, *keys).count()
+
+
 def _tagged_counts(df: DataFrame) -> DataFrame:
-    """Every complete-mode table in one aggregate: the branches' key
-    projections, each tagged with its table name, unioned by column name
-    (a table's absent key columns are null) and counted by (table, every
-    key column)."""
-    keys = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        [
-            project(df).withColumn(_TABLE, F.lit(name))
-            for name, (project, _) in COUNT_KEYS.items()
-        ],
-    )
-    return keys.groupBy(_TABLE, *[c for c in keys.columns if c != _TABLE]).count()
+    """The tagged count table of ``df`` (see ``_tagged_counter``)."""
+    return _tagged_counter(df)(df)
 
 
 #: State partitions of each per-query stateful aggregation. A streaming
@@ -141,14 +155,16 @@ def run_multiplex(
     state_store_provider: str | None = None,
 ) -> StreamRunner:
     """Efficiency mode: one query, one source read per micro-batch; the
-    foreachBatch closure persists the batch and hands it to the tagged
-    count sink (one merge for all five complete-mode tables) and the
-    top-k sink."""
+    foreachBatch closure persists the batch and runs the tagged count sink
+    (one merge for all five complete-mode tables) and the top-k sink on
+    two threads, each inheriting the query's job group and batch
+    properties. It waits for both and re-raises the first failure."""
+    counts = _tagged_counter(products)
     sinks = [
         foreach_batch_incremental_agg(
             os.path.join(out_root, _COUNTS_DIR, "state"),
-            _tagged_counts,
-            [c for c in _tagged_counts(products).columns if c != _COUNT],
+            counts,
+            [c for c in counts(products).columns if c != _COUNT],
             [_COUNT],
         ),
         _topk_sink(out_root),
@@ -157,8 +173,11 @@ def run_multiplex(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            for sink in sinks:
-                sink(batch_df, batch_id)
+            inherit = inheritable_thread_target(batch_df.sparkSession)
+            with ThreadPoolExecutor(len(sinks)) as pool:
+                runs = [pool.submit(inherit(s), batch_df, batch_id) for s in sinks]
+            for run in runs:
+                run.result()
         finally:
             batch_df.unpersist()
 

@@ -64,8 +64,9 @@ def foreach_batch_per_batch_topk(
     tests/test_pipeline.py's full-topology parity assert).
     """
 
+    order = [F.desc(k_order_desc)] + [F.asc(c) for c in tiebreak_asc]
+
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        order = [F.desc(k_order_desc)] + [F.asc(c) for c in tiebreak_asc]
         aggregate(batch_df).orderBy(*order).limit(k).write.mode(
             "overwrite"
         ).parquet(f"{out_dir}/batch_id={batch_id}")
@@ -229,9 +230,10 @@ def foreach_batch_incremental_agg(
 ) -> Callable[[DataFrame, int], None]:
     """Incremental materialized-view sink: per micro-batch, aggregate ONLY
     the batch (``agg_fn``: rows -> additive partial aggregate) and merge
-    it into the parquet state table with ``merge_agg_state`` — the view is
-    maintained in O(|batch|) per trigger instead of per-batch full
-    recomputation (foreach_batch_reaggregate's shape). ``merge_fn``
+    it into the parquet state table with ``merge_agg_state`` (the state
+    unioned with the delta and aggregated once per key) — a trigger reads
+    the batch and the state table, never the raw history that
+    foreach_batch_reaggregate's shape rescans. ``merge_fn``
     defaults to the additive ``merge_agg_state``; any monoid merge with
     the same signature works (e.g. ``sketches.merge_max_state`` for HLL
     registers).
@@ -262,15 +264,11 @@ def foreach_batch_incremental_agg(
             return  # replayed micro-batch: already merged
         delta = agg_fn(batch_df)
         if _state_exists(path):
-            # Every version is written in the delta's schema (the merge is
-            # cast back to it: a decimal sum would otherwise widen by one
-            # digit per merge), so the read needs no schema-inference job.
-            schema = delta.schema
-            state = spark.read.schema(schema).parquet(path)
-            merged = combine(state, delta, keys, counters)
-            delta = merged.select(
-                *[F.col(c).cast(schema[c].dataType) for c in merged.columns]
-            )
+            # Every version is written in the delta's schema (the merge
+            # keeps each counter's input type), so the read needs no
+            # schema-inference job.
+            state = spark.read.schema(delta.schema).parquet(path)
+            delta = combine(state, delta, keys, counters)
         _publish_versioned(delta, path, batch_id)
 
     return write
