@@ -13,6 +13,9 @@ immediately after the read).
 Measured at sf0.1 / local[32] (scripts/probe_narrow_parallelism.py):
 the MinHash signature pass runs 1.6 s on ONE task as-is vs 0.65 s after a
 32-way spread; CDC chunking 2.2 s vs 0.30 s.
+
+``small_side`` is the opposite placement decision: whether an iterative
+operator's input is small enough to skip the cluster and run driver-side.
 """
 
 from __future__ import annotations
@@ -64,3 +67,35 @@ def spread(df: DataFrame, *key_cols: Column | str) -> DataFrame:
         pass
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
     return df.repartition(n, *cols)
+
+
+# Row count at or under which an iterative operator runs on the driver.
+DRIVER_THRESHOLD = 100_000
+
+
+def small_side(df: DataFrame, threshold: int) -> list | None:
+    """The small-side policy shared by the iterative operators: return
+    ``df``'s rows when there are at most ``threshold`` of them, so the
+    caller replays its algorithm driver-side, else None.
+
+    Fixed per-job overhead dwarfs the work on small inputs (Chukonu,
+    VLDB 2021): a graph loop or BPE trainer on a few thousand rows runs
+    rounds of jobs to do microseconds of arithmetic. One bounded
+    ``limit(threshold + 1)`` collect tells the cases apart.
+
+    ``df`` is persisted BEFORE the probe: ``limit`` cannot stop early
+    below an upstream shuffle, so without the pin an over-threshold input
+    would run its upstream pipeline once for the probe and again for the
+    distributed path. When the rows fit, ``df`` is unpersisted here; when
+    they do not, it stays cached and the caller unpersists it once its
+    distributed path has materialized. ``threshold <= 0`` returns None
+    without a job (forces the distributed path).
+    """
+    if threshold <= 0:
+        return None
+    df.persist()
+    rows = df.limit(threshold + 1).collect()
+    if len(rows) > threshold:
+        return None
+    df.unpersist()
+    return rows

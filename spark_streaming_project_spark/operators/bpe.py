@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.partitioning import DRIVER_THRESHOLD, small_side
 from ..functions.text import tokens
 
 __all__ = ["word_freq_dict", "bpe_train_merges", "bpe_reference"]
@@ -105,7 +106,7 @@ def bpe_train_merges_from_dict(
     word_counts: DataFrame,
     n_merges: int = 10,
     token_curve: list[tuple[int, int]] | None = None,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> list[tuple[str, str, int]]:
     """Full-recompute trainer over an explicit (word, cnt) dictionary —
     the corpus-independent entry point (a dictionary can be maintained
@@ -115,60 +116,20 @@ def bpe_train_merges_from_dict(
     merge — one extra scalar aggregate per round on the already-
     checkpointed dict, nothing corpus-sized.
 
-    Adaptive physical strategy (r13 — the ``connected_components``
-    driver-path pattern, guide §1.2): a dictionary of ≤
-    ``driver_threshold`` unique words (checked with a bounded
-    ``limit(threshold+1)`` probe) trains driver-side with the exact
-    reference semantics — the training loop is 2-3 fixed-overhead jobs
+    Adaptive physical strategy (:func:`small_side`): a dictionary of at
+    most ``driver_threshold`` unique words trains driver-side in
+    :func:`bpe_reference` — the training loop is 2-3 fixed-overhead jobs
     per round on a vocab-sized frame, which at small vocabularies is
     pure scheduling cost (measured: the sf0.1 corpus has a 31-word
     vocab; 8 merges ran ~25 jobs to do microseconds of work). Both
-    paths produce IDENTICAL merge tables and curves (the driver loop is
-    ``bpe_reference``, the long-standing pytest parity oracle of the
-    distributed loop); pass ``driver_threshold=0`` to force the
-    distributed path. The corpus-sized word-dict aggregate stays in
-    Spark either way; the collect is vocab-bounded."""
-    # r14 (VERDICT r13 ask #7): persist before the bounded probe — an
-    # over-threshold dictionary otherwise paid its upstream aggregate once
-    # for the probe and again for the distributed trainer's checkpoint.
-    if driver_threshold > 0:
-        word_counts = word_counts.persist()
-        probe = word_counts.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            word_counts.unpersist()
-            words = [(list(r["word"]), int(r["cnt"])) for r in probe]
-            if token_curve is not None:
-                token_curve.append(
-                    (0, sum(len(s) * c for s, c in words))
-                )
-            merges: list[tuple[str, str, int]] = []
-            for i in range(n_merges):
-                counts: dict[tuple[str, str], int] = {}
-                for syms, c in words:
-                    for a, b in zip(syms, syms[1:]):
-                        counts[(a, b)] = counts.get((a, b), 0) + c
-                if not counts:
-                    break
-                (left, right), cnt = min(
-                    counts.items(),
-                    key=lambda kv: (-kv[1], f"{kv[0][0]}{_SEP}{kv[0][1]}"),
-                )
-                merges.append((left, right, cnt))
-                new_words = []
-                for syms, c in words:
-                    out: list[str] = []
-                    for s in syms:
-                        if out and out[-1] == left and s == right:
-                            out[-1] = left + right
-                        else:
-                            out.append(s)
-                    new_words.append((out, c))
-                words = new_words
-                if token_curve is not None:
-                    token_curve.append(
-                        (i + 1, sum(len(s) * c for s, c in words))
-                    )
-            return merges
+    paths produce IDENTICAL merge tables and curves; pass
+    ``driver_threshold=0`` to force the distributed path. The
+    corpus-sized word-dict aggregate stays in Spark either way; the
+    collect is vocab-bounded."""
+    rows = small_side(word_counts, driver_threshold)
+    if rows is not None:
+        wc = {r["word"]: int(r["cnt"]) for r in rows}
+        return bpe_reference(wc, n_merges, token_curve)
 
     def _tokens(frame: DataFrame) -> int:
         row = frame.agg(
@@ -328,12 +289,19 @@ def bpe_train_merges_incremental_from_dict(
     return merges
 
 
-def bpe_reference(word_counts: dict[str, int], n_merges: int = 10):
-    """Pure-Python reference BPE (the pytest oracle): identical greedy
-    semantics and tie-breaking."""
+def bpe_reference(
+    word_counts: dict[str, int],
+    n_merges: int = 10,
+    token_curve: list[tuple[int, int]] | None = None,
+):
+    """Pure-Python BPE: identical greedy semantics and tie-breaking to
+    the distributed trainer, whose small-dictionary driver path it is.
+    ``token_curve`` is filled as in :func:`bpe_train_merges_from_dict`."""
     words = [(list(w), c) for w, c in word_counts.items()]
+    if token_curve is not None:
+        token_curve.append((0, sum(len(s) * c for s, c in words)))
     merges = []
-    for _ in range(n_merges):
+    for i in range(n_merges):
         counts: dict[tuple[str, str], int] = {}
         for syms, c in words:
             for a, b in zip(syms, syms[1:]):
@@ -355,6 +323,8 @@ def bpe_reference(word_counts: dict[str, int], n_merges: int = 10):
                     out.append(s)
             new_words.append((out, c))
         words = new_words
+        if token_curve is not None:
+            token_curve.append((i + 1, sum(len(s) * c for s, c in words)))
     return merges
 
 

@@ -19,8 +19,46 @@ released, so lineage never grows past one round's plan.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions.partitioning import DRIVER_THRESHOLD, small_side
+
+
+def _edges(df: DataFrame, src: str, dst: str, a: str, b: str) -> DataFrame:
+    """``df``'s endpoints as columns ``a`` and ``b``, minus edges with a
+    null endpoint. SQL joins never match a null key, and filtering before
+    the :func:`small_side` probe gives the driver and distributed paths
+    the same edge set, so neither emits a null node."""
+    return df.select(F.col(src).alias(a), F.col(dst).alias(b)).filter(
+        F.col(a).isNotNull() & F.col(b).isNotNull()
+    )
+
+
+def _driver_frame(
+    proj: DataFrame,
+    node: str,
+    value: str,
+    vtype: T.DataType | None,
+    items: list,
+    *more: DataFrame,
+) -> DataFrame:
+    """The driver path's result frame of ``(node, value)`` ``items``.
+
+    The node type is widened over both endpoint columns of ``proj`` (and
+    the single column of each frame in ``more``, e.g. the seeds), as the
+    distributed path's union widens it. ``vtype=None`` types the value
+    column like the node column."""
+    cols = [proj.select(F.col(c).alias(node)) for c in proj.columns]
+    cols += [m.select(F.col(m.columns[0]).alias(node)) for m in more]
+    node_f = reduce(DataFrame.unionByName, cols).schema.fields[0]
+    schema = T.StructType(
+        [node_f, T.StructField(value, vtype or node_f.dataType, True)]
+    )
+    return proj.sparkSession.createDataFrame(items, schema)
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -44,20 +82,20 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
     stats: dict | None = None,
     symmetrized: bool = False,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; ``component``
-    is the minimum node id reachable through any chain of edges.
+    is the minimum node id reachable through any chain of edges. Edges
+    with a null endpoint are dropped.
 
-    Adaptive physical strategy, like the n-gram dedup chooser:
+    Adaptive physical strategy (:func:`small_side`):
 
-    - **small edge sets** (≤ ``driver_threshold`` rows, checked with a
-      bounded ``limit(threshold+1)`` probe) collapse in a driver-side
-      union-find — a dedup pair graph is usually tiny relative to its
-      corpus, and ~5 distributed rounds of fixed job overhead would dwarf
-      the microseconds of actual work;
+    - **small edge sets** (≤ ``driver_threshold`` rows) collapse in a
+      driver-side union-find — a dedup pair graph is usually tiny
+      relative to its corpus, and ~5 distributed rounds of fixed job
+      overhead would dwarf the microseconds of actual work;
     - **large edge sets** run the distributed loop: every round is two
       equi-joins + a keyed min aggregate, all hash-partitioned on node id —
       no driver-side graph, no crossJoin. Rounds needed = O(log n) thanks
@@ -66,59 +104,35 @@ def connected_components(
       rounds don't converge rather than returning a partially propagated
       (wrong) labeling.
 
-    Both paths produce identical labelings (equivalence property-tested);
-    pass ``driver_threshold=0`` to force the distributed path. When a
-    ``stats`` dict is supplied it receives ``{"rounds": n, "path": ...}``
-    — the scale-stress harness uses it to pin the O(log n) round claim on
-    pathological topologies (long chain, giant component).
+    Both paths produce identical labelings (property-tested, null
+    endpoints included); pass ``driver_threshold=0`` to force the
+    distributed path. When a ``stats`` dict is supplied it receives
+    ``{"rounds": n, "path": ...}`` — the scale-stress harness uses it to
+    pin the O(log n) round claim on pathological topologies (long chain,
+    giant component).
     """
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    sym = _edges(edges, src, dst, "u", "v")
+    rows = small_side(sym, driver_threshold)
+    if rows is not None:
+        if stats is not None:
+            stats["path"] = "driver"
+            stats["rounds"] = 0
+        parent: dict = {}
 
-    if driver_threshold > 0:
-        # r14 (VERDICT r13 ask #7): persist BEFORE the bounded probe so an
-        # over-threshold graph pays the upstream pair pipeline once (the
-        # probe's partitions land in the cache and the distributed loop
-        # reads them) instead of probe + full recompute.
-        sym = sym.persist()
-        probe = sym.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            sym.unpersist()
-            if stats is not None:
-                stats["path"] = "driver"
-                stats["rounds"] = 0
-            parent: dict = {}
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
 
-            def find(x):
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for r in probe:
-                # null endpoints never match SQL joins — skip (ADVICE r13)
-                if r["u"] is None or r["v"] is None:
-                    continue
-                ra, rb = find(r["u"]), find(r["v"])
-                if ra != rb:  # min root wins -> roots are component minima
-                    parent[max(ra, rb)] = min(ra, rb)
-            rows = [(x, find(x)) for x in parent]
-            # node type widened over BOTH endpoint columns, matching the
-            # distributed union (ADVICE r13)
-            node_f = (
-                sym.select("u")
-                .unionByName(sym.select(F.col("v").alias("u")))
-                .schema.fields[0]
-            )
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    node_f,
-                    T.StructField("component", node_f.dataType, True),
-                ]
-            )
-            return edges.sparkSession.createDataFrame(rows or [], schema)
+        for u, v in rows:
+            ru, rv = find(u), find(v)
+            if ru != rv:  # min root wins -> roots are component minima
+                parent[max(ru, rv)] = min(ru, rv)
+        return _driver_frame(
+            sym, "u", "component", None, [(x, find(x)) for x in parent]
+        )
 
     # symmetrized=True: the caller already provides BOTH edge directions
     # (e.g. a pre-written bucketed table, connected_components_bucketed) —
@@ -432,7 +446,7 @@ def kcore_subgraph(
     dst: str,
     k: int = 3,
     rounds: int = 8,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """``k``-core of the (undirected) pair graph by FIXED-ROUND peeling:
     repeatedly drop nodes with degree < k and the edges touching them.
@@ -448,61 +462,34 @@ def kcore_subgraph(
     Scale shape per round: one degree aggregate + two semi-join prunes,
     all keyed on node ids — the same join family as the census above; the
     edge set only SHRINKS, so later rounds cost less. Returns
-    (node_id, core_degree) for surviving nodes.
-    """
-    # r13 — adaptive physical strategy (the connected_components
-    # small-side pattern): pair graphs at or under ``driver_threshold``
-    # rows (bounded limit probe) peel driver-side — every round is exact
-    # set/integer arithmetic, so the paths are bit-identical
-    # (distributed-parity pytest), and ``rounds`` fixed rounds of
-    # shuffle+checkpoint overhead collapse. driver_threshold=0 forces
-    # the distributed loop (the 100 TB path).
-    # r14 (VERDICT r13 ask #7): the projected pair frame is PERSISTED
-    # before the bounded probe — ``limit`` cannot early-terminate below
-    # the upstream banded-join shuffles, so without the pin an
-    # over-threshold graph (the 100 TB case) paid the full upstream DAG
-    # once for the probe and again for the distributed loop. The probe's
-    # partitions land in the cache and the distributed path reads them.
-    proj = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if driver_threshold > 0:
-        proj = proj.persist()
-        probe = proj.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            proj.unpersist()
-            sym = set()
-            for r in probe:
-                # skip null endpoints: SQL joins never match null keys and
-                # the a != b filter drops null rows (ADVICE r13)
-                if r["a"] is None or r["b"] is None:
-                    continue
-                if r["a"] != r["b"]:
-                    sym.add((r["a"], r["b"]))
-                    sym.add((r["b"], r["a"]))
-            for _ in range(rounds):
-                deg: dict = {}
-                for a, _b in sym:
-                    deg[a] = deg.get(a, 0) + 1
-                keep = {n for n, d in deg.items() if d >= k}
-                sym = {(a, b) for a, b in sym if a in keep and b in keep}
-            core: dict = {}
-            for a, _b in sym:
-                core[a] = core.get(a, 0) + 1
-            from pyspark.sql import types as T
+    (node_id, core_degree) for surviving nodes; edges with a null
+    endpoint are dropped.
 
-            # node type = the union of BOTH endpoint columns, exactly as
-            # the distributed path's symmetrizing union widens it
-            # (ADVICE r13)
-            node_f = (
-                proj.select(F.col("a").alias("node_id"))
-                .unionByName(proj.select(F.col("b").alias("node_id")))
-                .schema.fields[0]
-            )
-            schema = T.StructType(
-                [node_f, T.StructField("core_degree", T.LongType(), True)]
-            )
-            return pairs.sparkSession.createDataFrame(
-                sorted(core.items()) if core else [], schema
-            )
+    Pair graphs of at most ``driver_threshold`` rows peel driver-side
+    (:func:`small_side`); every round is exact set/integer arithmetic, so
+    the two paths are bit-identical. ``driver_threshold=0`` forces the
+    distributed loop.
+    """
+    proj = _edges(pairs, src, dst, "a", "b")
+    rows = small_side(proj, driver_threshold)
+    if rows is not None:
+        sym = set()
+        for a, b in rows:
+            if a != b:
+                sym.add((a, b))
+                sym.add((b, a))
+        for _ in range(rounds):
+            deg: dict = {}
+            for a, _b in sym:
+                deg[a] = deg.get(a, 0) + 1
+            keep = {n for n, d in deg.items() if d >= k}
+            sym = {(a, b) for a, b in sym if a in keep and b in keep}
+        core: dict = {}
+        for a, _b in sym:
+            core[a] = core.get(a, 0) + 1
+        return _driver_frame(
+            proj, "node_id", "core_degree", T.LongType(), sorted(core.items())
+        )
 
     # ``edges`` is consumed twice by the symmetrizing union —
     # persist so the upstream pair pipeline runs once (see pagerank)
@@ -521,8 +508,7 @@ def kcore_subgraph(
     # connected_components; previous blocks freed as we go)
     sym = sym.localCheckpoint(eager=True)
     edges.unpersist()  # sym is materialized; the input cache can go
-    if driver_threshold > 0:
-        proj.unpersist()  # probe cache no longer needed either
+    proj.unpersist()  # and so can the probe's
     for _ in range(rounds):
         deg = sym.groupBy("a").agg(F.count("*").alias("_dg"))
         keep = deg.filter(F.col("_dg") >= k).select("a")
@@ -544,7 +530,7 @@ def pagerank_quantized(
     dst: str = "id_b",
     iters: int = 4,
     q: int = 1_000_000_000,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Integer-quantized PageRank: ranks live in fixed-point units of
     ``1/q`` node-mass and every operation — the 0.85 damping, the
@@ -562,62 +548,38 @@ def pagerank_quantized(
     nodes by construction). Per round: one join + one keyed integer sum,
     lineage checkpoint-truncated. Returns (node, rank) in 1/q units.
 
-    r13 — adaptive physical strategy (the :func:`connected_components`
-    small-side pattern, guide §1.2): edge sets at or under
-    ``driver_threshold`` rows (bounded ``limit(threshold+1)`` probe) run
-    the power loop driver-side — every operation is EXACT integer
-    arithmetic, so the two paths are bit-identical by construction
-    (distributed-parity pytest) and ``iters`` rounds of fixed
-    shuffle/checkpoint overhead collapse to microseconds on the pair
-    graphs dedup actually produces. Pass ``driver_threshold=0`` to force
-    the distributed loop (the 100 TB path: one shuffle per round).
+    Edge sets of at most ``driver_threshold`` rows run the power loop
+    driver-side (:func:`small_side`); every operation is exact integer
+    arithmetic, so the two paths are bit-identical. Edges with a null
+    endpoint are dropped. ``driver_threshold=0`` forces the distributed
+    loop (the 100 TB path: one shuffle per round).
     """
-    # r14 (VERDICT r13 ask #7): persist the projected edge frame BEFORE
-    # the bounded probe so an over-threshold graph pays the upstream pair
-    # pipeline once (probe partitions land in the cache; the distributed
-    # loop reads them) instead of once for the probe and again in full.
-    proj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    if driver_threshold > 0:
-        probe = proj.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            proj.unpersist()
-            sym = set()
-            for r in probe:
-                # null endpoints never match SQL joins — skip (ADVICE r13)
-                if r["u"] is None or r["v"] is None:
-                    continue
-                sym.add((r["u"], r["v"]))
-                sym.add((r["v"], r["u"]))
-            deg: dict = {}
-            for s, _dd in sym:
-                deg[s] = deg.get(s, 0) + 1
-            base = (15 * q) // 100
-            ranks = {n: q for n in deg}
-            for _ in range(iters):
-                contrib: dict = {}
-                for s, d in sym:
-                    # same integral div as the SQL expression: operands
-                    # are positive, so // == div exactly
-                    contrib[d] = contrib.get(d, 0) + (85 * ranks[s]) // (
-                        100 * deg[s]
-                    )
-                ranks = {n: base + contrib.get(n, 0) for n in deg}
-            from pyspark.sql import types as T
+    proj = _edges(edges, src, dst, "u", "v")
+    rows = small_side(proj, driver_threshold)
+    if rows is not None:
+        sym = set()
+        for u, v in rows:
+            sym.add((u, v))
+            sym.add((v, u))
+        deg: dict = {}
+        for s, _d in sym:
+            deg[s] = deg.get(s, 0) + 1
+        base = (15 * q) // 100
+        ranks = {n: q for n in deg}
+        for _ in range(iters):
+            contrib: dict = {}
+            for s, d in sym:
+                # same integral div as the SQL expression: operands
+                # are positive, so // == div exactly
+                contrib[d] = contrib.get(d, 0) + (85 * ranks[s]) // (
+                    100 * deg[s]
+                )
+            ranks = {n: base + contrib.get(n, 0) for n in deg}
+        return _driver_frame(
+            proj, "node", "rank", T.LongType(), sorted(ranks.items())
+        )
 
-            # node type widened over BOTH endpoint columns, matching the
-            # distributed union's schema (ADVICE r13)
-            node_f = (
-                proj.select(F.col("u").alias("node"))
-                .unionByName(proj.select(F.col("v").alias("node")))
-                .schema.fields[0]
-            )
-            schema = T.StructType(
-                [node_f, T.StructField("rank", T.LongType(), True)]
-            )
-            return edges.sparkSession.createDataFrame(
-                sorted(ranks.items()) if ranks else [], schema
-            )
-
+    proj.persist()  # the symmetrizing union reads it twice
     e = proj.select(F.col("u").alias("_s"), F.col("v").alias("_d"))
     e = e.unionByName(
         proj.select(F.col("v").alias("_s"), F.col("u").alias("_d"))
@@ -774,79 +736,54 @@ def bfs_hops(
     dst: str,
     seeds: DataFrame,
     rounds: int = 4,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """Multi-source BFS: for every node reachable from ``seeds`` within
     ``rounds`` hops over the undirected ``pairs`` edge set, the exact
     hop distance to the NEAREST seed. Unreached nodes are absent (inner
-    semantics). ``seeds`` is a one-column frame named ``node_id``.
+    semantics). ``seeds`` is a one-column frame named ``node_id``; null
+    seeds and edges with a null endpoint are dropped.
 
     Shape: the classic frontier relaxation unrolled a fixed number of
     rounds — each round is ONE equi-join of the edge set against the
-    current distance frame plus a min-aggregate; no driver loop state,
-    no collect, and the distance frame never exceeds |reachable nodes|.
-    Fixed unrolling (same rounds, same answer on any engine) is what
-    makes the DuckDB oracle an exact twin; at 100 TB you would add a
-    convergence check on the frontier count, which is a bounded
-    driver-side aggregate per round.
+    current distance frame plus a min-aggregate, and the distance frame
+    never exceeds |reachable nodes|. Fixed unrolling (same rounds, same
+    answer on any engine) is what makes the DuckDB oracle an exact twin;
+    at 100 TB you would add a convergence check on the frontier count,
+    which is a bounded driver-side aggregate per round.
+
+    When both the pair graph and the seed set have at most
+    ``driver_threshold`` rows (:func:`small_side`), the relaxation runs
+    driver-side with the same per-round batch-min update, so the two
+    paths are bit-identical. ``driver_threshold=0`` forces the
+    distributed loop.
     """
-    # r13 — adaptive physical strategy (the connected_components
-    # small-side pattern): when BOTH the pair graph and the seed set fit
-    # under the bounded limit probe, relax driver-side — hops are exact
-    # integers and the per-round batch-min update is replicated verbatim,
-    # so the paths are bit-identical (distributed-parity pytest), and
-    # ``rounds`` fixed rounds of join+checkpoint overhead collapse.
-    # driver_threshold=0 forces the distributed loop (the 100 TB path).
-    # r14 (VERDICT r13 ask #7): persist the projected pair frame BEFORE
-    # the bounded probe — over-threshold graphs otherwise paid the
-    # upstream pipeline for the probe AND (twice, via the symmetrizing
-    # union) for the distributed loop.
-    proj = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    if driver_threshold > 0:
-        probe = proj.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            seed_rows = seeds.select("node_id").limit(
-                driver_threshold + 1
-            ).collect()
-            if len(seed_rows) <= driver_threshold:
-                proj.unpersist()
-                sym = set()
-                for r in probe:
-                    # null endpoints never match SQL joins (ADVICE r13)
-                    if r["a"] is None or r["b"] is None:
-                        continue
-                    sym.add((r["a"], r["b"]))
-                    sym.add((r["b"], r["a"]))
-                dist = {
-                    r["node_id"]: 0
-                    for r in seed_rows
-                    if r["node_id"] is not None
-                }
-                for _ in range(rounds):
-                    nxt = dict(dist)
-                    for a, b in sym:
-                        if a in dist:
-                            cand = dist[a] + 1
-                            if b not in nxt or cand < nxt[b]:
-                                nxt[b] = cand
-                    dist = nxt
-                from pyspark.sql import types as T
+    proj = _edges(pairs, src, dst, "a", "b")
+    seed_ids = seeds.select("node_id").filter(F.col("node_id").isNotNull())
+    rows = small_side(proj, driver_threshold)
+    seed_rows = None
+    if rows is not None:
+        seed_rows = small_side(seed_ids, driver_threshold)
+    if seed_rows is not None:
+        sym = set()
+        for a, b in rows:
+            sym.add((a, b))
+            sym.add((b, a))
+        dist = {s: 0 for (s,) in seed_rows}
+        for _ in range(rounds):
+            nxt = dict(dist)
+            for a, b in sym:
+                if a in dist:
+                    cand = dist[a] + 1
+                    if b not in nxt or cand < nxt[b]:
+                        nxt[b] = cand
+            dist = nxt
+        return _driver_frame(
+            proj, "node_id", "hops", T.IntegerType(), sorted(dist.items()),
+            seed_ids,
+        )
 
-                # node type widened over seeds AND both endpoint columns,
-                # matching what the distributed union produces (ADVICE r13)
-                node_f = (
-                    seeds.select("node_id")
-                    .unionByName(proj.select(F.col("a").alias("node_id")))
-                    .unionByName(proj.select(F.col("b").alias("node_id")))
-                    .schema.fields[0]
-                )
-                schema = T.StructType(
-                    [node_f, T.StructField("hops", T.IntegerType(), True)]
-                )
-                return pairs.sparkSession.createDataFrame(
-                    sorted(dist.items()) if dist else [], schema
-                )
-
+    proj.persist()  # the symmetrizing union reads it twice
     # checkpoint the edge set once and each round's distance frame:
     # dist_r references dist_{r-1} twice (carry + expansion) and edges
     # once, so an unchecked unroll recomputes the upstream pair
@@ -860,10 +797,11 @@ def bfs_hops(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    proj.unpersist()  # edges is materialized; the probe cache can go
-    dist = seeds.select(
+    proj.unpersist()  # edges is materialized; the input cache can go
+    dist = seed_ids.select(
         F.col("node_id"), F.lit(0).cast("int").alias("hops")
     ).localCheckpoint(eager=True)
+    seed_ids.unpersist()
     for _ in range(rounds):
         expanded = edges.join(
             dist, edges["a"] == dist["node_id"]

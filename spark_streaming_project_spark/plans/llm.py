@@ -6083,8 +6083,9 @@ def neardup_hub_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     document's exact hop distance (<= 4) to the nearest duplication HUB
     (degree >= 3 node) — triage for 'how close is this doc to a
     template farm'. Fixed 4-round frontier relaxation (one edge join +
-    one min-aggregate per round, no driver loop state), completing the
-    graph family next to CC / PageRank / k-core / triangles."""
+    one min-aggregate per round; driver-side for a small graph, see
+    ``bfs_hops``), completing the graph family next to CC / PageRank /
+    k-core / triangles."""
     from ..operators.dedup import ngram_jaccard_pairs_adaptive
     from ..operators.graph import bfs_hops, degree_counts
 

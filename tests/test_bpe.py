@@ -5,9 +5,13 @@ iterative argmax loop has no SQL oracle (like k-means)."""
 
 from __future__ import annotations
 
+from spark_streaming_project_spark.functions.partitioning import (
+    DRIVER_THRESHOLD,
+)
 from spark_streaming_project_spark.operators.bpe import (
     bpe_reference,
     bpe_train_merges,
+    bpe_train_merges_from_dict,
     word_freq_dict,
 )
 from spark_streaming_project_spark.sources.batch import load_table
@@ -21,26 +25,37 @@ def _docs(spark, texts):
     )
 
 
+def _train(df, n_merges):
+    """The merge table at the default threshold (driver path, which IS
+    bpe_reference) and at 0 (the distributed trainer), so the reference
+    pins below hold the distributed loop too."""
+    wd = word_freq_dict(df, "text")
+    return [
+        bpe_train_merges_from_dict(wd, n_merges, driver_threshold=t)
+        for t in (DRIVER_THRESHOLD, 0)
+    ]
+
+
 def test_bpe_hand_checked(spark):
     # classic toy corpus: "low low low lower newest newest"
     df = _docs(spark, ["low low low lower", "newest newest"])
-    got = bpe_train_merges(df, "text", n_merges=4)
     want = bpe_reference(
         {"low": 3, "lower": 1, "newest": 2}, n_merges=4
     )
-    assert got == want
-    # first merge must be the most frequent pair: 'l o' appears 4 times
-    assert got[0][:2] == ("l", "o") and got[0][2] == 4
+    for got in _train(df, 4):
+        assert got == want
+        # first merge must be the most frequent pair: 'l o' appears 4 times
+        assert got[0][:2] == ("l", "o") and got[0][2] == 4
 
 
 def test_bpe_overlapping_run_merges_left_first(spark):
     df = _docs(spark, ["aaa aaa"])
-    got = bpe_train_merges(df, "text", n_merges=2)
     want = bpe_reference({"aaa": 2}, n_merges=2)
-    assert got == want
-    # merge 1: (a,a) count 4 (two per word, greedy); merge 2: (aa,a)
-    assert got[0] == ("a", "a", 4)
-    assert got[1][:2] == ("aa", "a")
+    for got in _train(df, 2):
+        assert got == want
+        # merge 1: (a,a) count 4 (two per word, greedy); merge 2: (aa,a)
+        assert got[0] == ("a", "a", 4)
+        assert got[1][:2] == ("aa", "a")
 
 
 def test_bpe_matches_reference_on_testdata(spark):
@@ -49,10 +64,10 @@ def test_bpe_matches_reference_on_testdata(spark):
         r["word"]: r["cnt"]
         for r in word_freq_dict(docs, "text").collect()
     }
-    got = bpe_train_merges(docs, "text", n_merges=6)
     want = bpe_reference(wc, n_merges=6)
-    assert got == want
-    assert len(got) == 6
+    for got in _train(docs, 6):
+        assert got == want
+        assert len(got) == 6
 
 
 def test_bpe_encode_matches_reference(spark):
@@ -119,20 +134,24 @@ def test_incremental_trainer_exact_parity(spark):
 
 
 def test_driver_path_parity_with_distributed(spark):
-    """r13 adaptive driver path: a dictionary under the threshold trains
+    """Adaptive driver path: a dictionary under the threshold trains
     driver-side; merges AND the token curve must be identical to the
-    distributed loop (driver_threshold=0 forces it)."""
-    from spark_streaming_project_spark.operators.bpe import (
-        bpe_train_merges_from_dict,
-    )
-
+    distributed loop, both when the probe finds the dictionary too big
+    (driver_threshold=1) and when there is no probe (0). No call may
+    leave a cached frame behind."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     wd = word_freq_dict(docs, "text")
-    curve_drv: list = []
-    curve_dist: list = []
-    drv = bpe_train_merges_from_dict(wd, n_merges=10, token_curve=curve_drv)
-    dist = bpe_train_merges_from_dict(
-        wd, n_merges=10, token_curve=curve_dist, driver_threshold=0
-    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    runs = []
+    for t in (DRIVER_THRESHOLD, 1, 0):
+        spark.catalog.clearCache()
+        curve: list = []
+        merges = bpe_train_merges_from_dict(
+            wd, n_merges=10, token_curve=curve, driver_threshold=t
+        )
+        assert cache.isEmpty(), t
+        runs.append((merges, curve))
+    (drv, curve_drv), (probed, curve_probed), (dist, curve_dist) = runs
     assert drv == dist
     assert curve_drv == curve_dist
+    assert (probed, curve_probed) == (dist, curve_dist)

@@ -6,6 +6,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from spark_streaming_project_spark.functions.partitioning import (
+    DRIVER_THRESHOLD,
+    small_side,
+)
 from spark_streaming_project_spark.operators.graph import connected_components
 
 # every topology runs through BOTH physical paths: the driver union-find
@@ -50,6 +54,48 @@ def test_star_and_triangle(spark, threshold):
 def test_empty_edges(spark, threshold):
     got = _cc(spark, [], threshold)
     assert got == {}
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("threshold", (*THRESHOLDS, 1))
+def test_null_endpoints_dropped_on_both_paths(spark, threshold):
+    # an edge with a null endpoint is no edge: 5 is in no component, and
+    # no null node appears (threshold 1: probed, then distributed)
+    spark.catalog.clearCache()
+    got = _cc(
+        spark, [(1, 2), (2, 3), (5, None), (None, 6), (6, 7)], threshold
+    )
+    assert got == {1: 1, 2: 1, 3: 1, 6: 6, 7: 6}
+    assert _cache_empty(spark)
+
+
+def test_small_side_probe_and_cache_rule(spark):
+    sc = spark.sparkContext
+    df = spark.range(3).select((F.col("id") * 2).alias("x"))
+    spark.catalog.clearCache()
+    # at or under the threshold: the rows, and the probe cache released
+    assert sorted(r["x"] for r in small_side(df, 3)) == [0, 2, 4]
+    assert _cache_empty(spark)
+    # over it: None, and the frame stays cached for the distributed path
+    assert small_side(df, 2) is None
+    assert df.storageLevel.useMemory and not _cache_empty(spark)
+    df.unpersist()
+    assert _cache_empty(spark)
+    # threshold 0: None without a job
+    sc.setJobGroup("small_side_zero", "small_side at threshold 0")
+    try:
+        assert small_side(df, 0) is None
+        jobs = sc.statusTracker().getJobIdsForGroup
+        assert list(jobs("small_side_zero")) == []
+        assert _cache_empty(spark)
+        small_side(df, 1)  # the group does record a probe job
+        assert jobs("small_side_zero")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        df.unpersist()
 
 
 def test_long_path_converges_within_log_rounds(spark):
@@ -318,11 +364,17 @@ def test_local_clustering_and_assortativity_hand_graph(spark):
     assert row["assortativity"] == want
 
 
-# --- r13: driver/distributed parity for the adaptive small-graph paths ----
-# pagerank_quantized / kcore_subgraph / bfs_hops gained the
-# connected_components small-side driver path; every operation in all
-# three is exact integer/set arithmetic, so the two paths must agree
-# BIT-FOR-BIT on any graph (not just to a tolerance).
+# --- driver/distributed parity for the adaptive small-graph paths ----
+# pagerank_quantized / kcore_subgraph / bfs_hops share the small_side
+# driver path with connected_components; every operation in all three is
+# exact integer/set arithmetic, so the paths must agree BIT-FOR-BIT on
+# any graph (not just to a tolerance), null endpoints included. Each
+# runs at the default threshold (driver path), at 1 (probed, then the
+# distributed path reads the probe's cache) and at 0 (no probe), and
+# must leave no cached frame behind.
+
+NULL_EDGES = [(5, None), (None, 6)]
+
 
 def _random_pairs(seed: int, n_nodes: int = 40, n_edges: int = 80):
     import random
@@ -336,42 +388,54 @@ def _random_pairs(seed: int, n_nodes: int = 40, n_edges: int = 80):
     return sorted(out)
 
 
+def _by_threshold(spark, run, key, value):
+    """{key: value} of ``run(t).collect()`` for t = default, 1, 0."""
+    out = []
+    for t in (DRIVER_THRESHOLD, 1, 0):
+        spark.catalog.clearCache()
+        out.append({r[key]: r[value] for r in run(t).collect()})
+        assert _cache_empty(spark), t
+    return out
+
+
 @pytest.mark.parametrize("seed", [1, 7])
 def test_pagerank_quantized_driver_distributed_parity(spark, seed):
     from spark_streaming_project_spark.operators.graph import (
         pagerank_quantized,
     )
 
-    df = spark.createDataFrame(_random_pairs(seed), "id_a long, id_b long")
-    drv = {
-        r["node"]: r["rank"]
-        for r in pagerank_quantized(df, "id_a", "id_b", iters=4).collect()
-    }
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank_quantized(
-            df, "id_a", "id_b", iters=4, driver_threshold=0
-        ).collect()
-    }
+    df = spark.createDataFrame(
+        _random_pairs(seed) + NULL_EDGES, "id_a long, id_b long"
+    )
+    drv, probed, dist = _by_threshold(
+        spark,
+        lambda t: pagerank_quantized(
+            df, "id_a", "id_b", iters=4, driver_threshold=t
+        ),
+        "node",
+        "rank",
+    )
     assert drv == dist and drv
+    assert probed == dist
 
 
 @pytest.mark.parametrize("seed", [2, 9])
 def test_kcore_driver_distributed_parity(spark, seed):
     from spark_streaming_project_spark.operators.graph import kcore_subgraph
 
-    df = spark.createDataFrame(_random_pairs(seed), "id_a long, id_b long")
-    drv = {
-        r["node_id"]: r["core_degree"]
-        for r in kcore_subgraph(df, "id_a", "id_b", k=3, rounds=8).collect()
-    }
-    dist = {
-        r["node_id"]: r["core_degree"]
-        for r in kcore_subgraph(
-            df, "id_a", "id_b", k=3, rounds=8, driver_threshold=0
-        ).collect()
-    }
+    df = spark.createDataFrame(
+        _random_pairs(seed) + NULL_EDGES, "id_a long, id_b long"
+    )
+    drv, probed, dist = _by_threshold(
+        spark,
+        lambda t: kcore_subgraph(
+            df, "id_a", "id_b", k=3, rounds=8, driver_threshold=t
+        ),
+        "node_id",
+        "core_degree",
+    )
     assert drv == dist
+    assert probed == dist
 
 
 @pytest.mark.parametrize("seed", [3, 11])
@@ -379,18 +443,34 @@ def test_bfs_hops_driver_distributed_parity(spark, seed):
     from spark_streaming_project_spark.operators.graph import bfs_hops
 
     pairs = _random_pairs(seed)
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    df = spark.createDataFrame(pairs + NULL_EDGES, "id_a long, id_b long")
     seeds = spark.createDataFrame(
-        [(pairs[0][0],), (pairs[-1][1],)], "node_id long"
+        [(pairs[0][0],), (pairs[-1][1],), (None,)], "node_id long"
     )
-    drv = {
-        r["node_id"]: r["hops"]
-        for r in bfs_hops(df, "id_a", "id_b", seeds, rounds=4).collect()
-    }
-    dist = {
-        r["node_id"]: r["hops"]
-        for r in bfs_hops(
-            df, "id_a", "id_b", seeds, rounds=4, driver_threshold=0
-        ).collect()
-    }
+    drv, probed, dist = _by_threshold(
+        spark,
+        lambda t: bfs_hops(
+            df, "id_a", "id_b", seeds, rounds=4, driver_threshold=t
+        ),
+        "node_id",
+        "hops",
+    )
     assert drv == dist and drv
+    assert probed == dist
+
+
+def test_bfs_hops_seed_probe_cache_released(spark):
+    # the edges fit under the threshold but the seeds do not: the second
+    # probe leaves the seeds cached, and the distributed path releases them
+    from spark_streaming_project_spark.operators.graph import bfs_hops
+
+    pairs = _random_pairs(5)
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    seeds = spark.range(len(pairs) + 10).withColumnRenamed("id", "node_id")
+    got = []
+    for t in (DRIVER_THRESHOLD, len(pairs)):
+        spark.catalog.clearCache()
+        out = bfs_hops(df, "id_a", "id_b", seeds, driver_threshold=t)
+        got.append({r["node_id"]: r["hops"] for r in out.collect()})
+        assert _cache_empty(spark), t
+    assert got[0] == got[1] and got[0]
